@@ -11,7 +11,10 @@ replaces leader scheduling, §3.1 steps 2-7).
 num_tasks maps to ``spark.sql.shuffle.partitions`` — the reference's
 per-stage task count is Spark's shuffle parallelism (leader.py:155-208
 schedules num_tasks workers per stage; the shuffle for the stateful
-stage is exactly where that parallelism matters).
+stage is exactly where that parallelism matters). It is a StreamJob
+field pinned only for the query start (streaming/job.py
+start_with_confs), so it is captured into the query's checkpoint as
+the state-partition count and the session's own setting is untouched.
 """
 
 from __future__ import annotations
@@ -211,8 +214,6 @@ def rainstorm(
     offsets (one machine.{id}.log per node)."""
     op1, s1 = parse_op(op1_spec)
     op2, s2 = parse_op(op2_spec)
-    if num_tasks:
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_tasks))
     return StreamJob(
         spark,
         input_dir,
@@ -220,4 +221,5 @@ def rainstorm(
         ops=[op1, op2],
         stateful=s1 or s2 if stateful is None else stateful,
         source=source,
+        num_tasks=num_tasks,
     )

@@ -744,7 +744,7 @@ def streaming_psi_drift_monitor(
     import datetime as _dt
 
     from stream_processing_spark.queries.streaming_queries import (
-        _drain_complete,
+        _drain_memory,
         _events_stream,
     )
 
@@ -785,7 +785,7 @@ def streaming_psi_drift_monitor(
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
     )
-    drained = _drain_complete(live, spark)
+    drained = _drain_memory(live, spark, "complete")
     hist = ref.join(drained, "cents", "full_outer").select(
         "cents",
         F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),

@@ -494,7 +494,7 @@ def streaming_page_hinkley_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from stream_processing_spark.queries.streaming_queries import (
-        _drain_complete,
+        _drain_memory,
         _events_stream,
     )
 
@@ -509,7 +509,7 @@ def streaming_page_hinkley_monitor(
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
         )
     )
-    return _ph_from_daily(_drain_complete(live, spark))
+    return _ph_from_daily(_drain_memory(live, spark, "complete"))
 
 
 # ------------------------------------------------ cohort LTV matrix

@@ -16,6 +16,12 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import table_path
 from stream_processing_spark.queries import register
+from stream_processing_spark.streaming.job import (
+    STATE_STORE_KEY,
+    STATE_STORE_PROVIDERS,
+    await_drained,
+    start_with_confs,
+)
 
 
 def _stream_dir(sf_dir: str, table: str) -> str:
@@ -87,30 +93,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_PARTITIONS = 32
 
 
-def _start_pinned(writer, spark: SparkSession, extra_confs: dict | None = None):
-    """Start `writer` under the pinned state-partition count (plus any
-    `extra_confs`, e.g. a state-store provider pin) and return the
-    running query, restoring the session confs immediately after start
-    (a streaming query captures its confs at start).
-
-    The pin-set/start/restore window mutates session confs, so
-    CONCURRENT query starts on one session could observe each other's
-    pin. Registry queries run sequentially (driver contract); a caller
-    who wants concurrent starts should start each query from its own
-    spark.newSession()."""
-    pins = {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS)}
-    pins.update(extra_confs or {})
-    prev = {k: spark.conf.get(k, None) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
-        return writer.start()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+def _pinned(confs: dict | None) -> dict:
+    """The registry's start pins: the state-partition count, then any
+    per-query ``confs`` (which may override it)."""
+    return {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS), **(confs or {})}
 
 
 # Micro-batch physical plans of recently drained registry streams —
@@ -131,15 +117,23 @@ def _capture_plan(q) -> None:
         pass
 
 
-def _run_drained(writer, spark: SparkSession, extra_confs: dict | None = None):
-    """Start `writer` pinned (see _start_pinned), drain it
-    (availableNow), and raise if it hangs."""
-    q = _start_pinned(writer, spark, extra_confs)
-    q.awaitTermination(300)
+def _drain(writer, spark: SparkSession, confs: dict | None = None) -> None:
+    """Drain `writer` (availableNow) under the registry pins plus
+    ``confs``, then capture its last micro-batch plan."""
+    q = start_with_confs(writer.trigger(availableNow=True), spark, _pinned(confs))
+    await_drained(q)
     _capture_plan(q)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("stream did not drain")
+
+
+def _drain_memory(
+    df: DataFrame, spark: SparkSession, mode: str, confs: dict | None = None
+) -> DataFrame:
+    """Drain ``df`` into a fresh memory sink in output ``mode``; return
+    the sink table (complete mode ⇒ final state == batch answer)."""
+    name = f"stream_q_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    _drain(writer, spark, confs)
+    return spark.table(name)
 
 
 def _drain_processing_time(
@@ -149,7 +143,7 @@ def _drain_processing_time(
     trigger: str = "300 milliseconds",
     stable_polls: int = 8,
     poll_sec: float = 0.5,
-    extra_confs: dict | None = None,
+    confs: dict | None = None,
 ) -> DataFrame:
     """Drain a stream that CANNOT use availableNow — processing-time
     timers/TTL only fire on a wall-clock trigger (an availableNow drain
@@ -180,7 +174,7 @@ def _drain_processing_time(
         .outputMode("update")
         .trigger(processingTime=trigger)
     )
-    q = _start_pinned(writer, spark, extra_confs)
+    q = start_with_confs(writer, spark, _pinned(confs))
     rows_by_batch: dict[int, int] = {}
     last_cnt, stable = -1, 0
     quiesced = False
@@ -223,20 +217,6 @@ def _drain_processing_time(
     return spark.table(name)
 
 
-def _drain_complete(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Run the streaming aggregation to completion; return the final
-    memory-sink table (complete mode ⇒ final state == batch answer)."""
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
-    return spark.table(name)
-
-
 @register(
     "streaming_counts_by_type",
     """
@@ -255,7 +235,7 @@ def streaming_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return _drain_complete(agg, spark)
+    return _drain_memory(agg, spark, "complete")
 
 
 @register(
@@ -281,7 +261,7 @@ def streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.windows import sliding_counts
 
     src = _events_stream(spark, sf_dir)
-    return _drain_complete(sliding_counts(src), spark)
+    return _drain_memory(sliding_counts(src), spark, "complete")
 
 
 @register(
@@ -316,7 +296,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.windows import session_counts
 
     src = _events_stream(spark, sf_dir)
-    return _drain_complete(session_counts(src), spark)
+    return _drain_memory(session_counts(src), spark, "complete")
 
 
 @register(
@@ -337,22 +317,13 @@ def streaming_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFr
 
     src = _events_stream(spark, sf_dir).select(F.col("event_type").alias("key"))
     counts = stateful_running_count(src, key_col="key")
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
+    out = _drain_memory(counts, spark, "update")
     # update mode emits one row per key per batch; the last (= max) is final
-    return spark.table(name).groupBy("key").agg(F.max("cnt").alias("cnt"))
+    return out.groupBy("key").agg(F.max("cnt").alias("cnt"))
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming."
-    "state.RocksDBStateStoreProvider"
-)
+# transformWithState mandates the RocksDB state-store provider
+_ROCKSDB = {STATE_STORE_KEY: STATE_STORE_PROVIDERS["rocksdb"]}
 
 
 def _assert_tws_runtime(spark: SparkSession) -> None:
@@ -389,38 +360,6 @@ def _assert_tws_runtime(spark: SparkSession) -> None:
         )
 
 
-def _drain_tws(
-    df: DataFrame,
-    spark: SparkSession,
-    output_mode: str,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a transformWithState stream into a memory sink under the
-    RocksDB provider pin (the state backend the API mandates).
-
-    ``state_partitions`` overrides the session-wide pin for queries
-    whose keyed state is DOMAIN-bounded: each state partition costs a
-    RocksDB column-family store open + state-server channel per
-    micro-batch (measured ~47 ms/partition on local[32], r11 profile),
-    so a query with a handful of keys should not pay for 32 stores —
-    state partition count is a per-query deployment decision sized to
-    keyed-state cardinality, exactly like a real checkpoint."""
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    extra = {
-        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER
-    }
-    if state_partitions is not None:
-        extra["spark.sql.shuffle.partitions"] = str(state_partitions)
-    _run_drained(writer, spark, extra_confs=extra)
-    return spark.table(name)
-
-
 @register(
     "streaming_tws_running_count",
     """
@@ -446,10 +385,14 @@ def streaming_tws_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = tws_running_count(src, key_col="key")
     # keyed state is bounded by the event_type DOMAIN (~5 keys): size
     # the state-store partition count to the key space, not the
-    # session default — 32 RocksDB stores per micro-batch for 5 keys
+    # registry pin — each state partition costs a RocksDB store open +
+    # state-server channel per micro-batch, and 32 stores for 5 keys
     # was pure per-partition protocol overhead (r11 profile: 3.9 s @32
     # → 2.8 s @8 on local[32], ~47 ms/store/batch)
-    out = _drain_tws(counts, spark, "update", state_partitions=8)
+    out = _drain_memory(
+        counts, spark, "update",
+        {**_ROCKSDB, "spark.sql.shuffle.partitions": "8"},
+    )
     # update mode emits one row per key per batch; the last (= max) is final
     return out.groupBy("key").agg(F.max("cnt").alias("cnt"))
 
@@ -496,9 +439,7 @@ def streaming_tws_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         flushed,
         spark,
         expected_input_rows=2 * n_events,
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER
-        },
+        confs=_ROCKSDB,
     )
     return out.groupBy("key").agg(
         F.sum("flushed").cast("bigint").alias("total")
@@ -538,16 +479,8 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", norm)
     )
     deduped = dedup_within_watermark(raw, ["event_id"], ts_col="ts", watermark="1 hour")
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        deduped.select("event_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
-    return spark.table(name).groupBy("event_id").agg(F.count(F.lit(1)).alias("n"))
+    out = _drain_memory(deduped.select("event_id"), spark, "append")
+    return out.groupBy("event_id").agg(F.count(F.lit(1)).alias("n"))
 
 
 @register(
@@ -571,7 +504,7 @@ def streaming_static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(nation), src.user_id % 25 == nation.n_nationkey
     )
     agg = joined.groupBy("n_name").agg(F.count(F.lit(1)).alias("cnt"))
-    return _drain_complete(agg, spark)
+    return _drain_memory(agg, spark, "complete")
 
 
 @register(
@@ -612,16 +545,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id")
-
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
-    return spark.table(name)
+    return _drain_memory(joined, spark, "append")
 
 
 @register(
@@ -644,7 +568,7 @@ def streaming_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
     )
-    return _drain_complete(agg, spark)
+    return _drain_memory(agg, spark, "complete")
 
 
 def _running_max_op(key: str, value: str, state):
@@ -681,18 +605,9 @@ def streaming_custom_stateful_max(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("user_id").cast("string").alias("key"),
         F.col("value").cast("string").alias("value"),
     )
-    out = stateful_flat_map(src, _running_max_op)
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
+    out = _drain_memory(stateful_flat_map(src, _running_max_op), spark, "update")
     return (
-        spark.table(name)
-        .groupBy(F.col("key").cast("bigint").alias("key"))
+        out.groupBy(F.col("key").cast("bigint").alias("key"))
         .agg(
             F.max(F.col("value").cast("decimal(12,2)"))
             .cast("double")
@@ -737,7 +652,7 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = src.groupBy(
         F.window("ts", "6 hours").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    snap = _drain_complete(agg, spark)
+    snap = _drain_memory(agg, spark, "complete")
     rk = F.row_number().over(
         W.partitionBy("window_start").orderBy(
             F.col("cnt").desc(), F.col("event_type")
@@ -784,8 +699,9 @@ def streaming_stream_stream_left_join(
     # last 2 h of purchases would be withheld forever. The 'max' policy
     # lets the unbounded click side (runs to Jan 30 23:57) drive the
     # global watermark past the whole closed purchase window. Scoped to
-    # the query-start window via extra_confs (a streaming query captures
-    # its confs at start), so the session default is restored after.
+    # the query-start window via the drain's confs (a streaming query
+    # captures its confs at start), so the session default is restored
+    # after.
     purchases = (
         _events_stream(spark, sf_dir)
         .filter(
@@ -812,20 +728,10 @@ def streaming_stream_stream_left_join(
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     ).select("purchase_id", "click_id")
-
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _drain_memory(
+        joined, spark, "append",
+        {"spark.sql.streaming.multipleWatermarkPolicy": "max"},
     )
-    _run_drained(
-        writer,
-        spark,
-        extra_confs={"spark.sql.streaming.multipleWatermarkPolicy": "max"},
-    )
-    return spark.table(name)
 
 
 # Shared by BOTH stateful-session tiers (applyInPandasWithState and
@@ -891,16 +797,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("user_id").cast("string").alias("key"), "ts")
     )
     sess = stateful_event_sessions(src, gap_sec=1800)
-
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        sess.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    _run_drained(writer, spark)
-    return spark.table(name)
+    return _drain_memory(sess, spark, "append")
 
 
 @register(
@@ -928,7 +825,7 @@ def streaming_tws_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("user_id").cast("string").alias("key"), "ts")
     )
     sess = tws_event_sessions(src, gap_sec=1800)
-    return _drain_tws(sess, spark, "append")
+    return _drain_memory(sess, spark, "append", _ROCKSDB)
 
 
 def _stage_halves(df: DataFrame, split_expr, d: str) -> None:
@@ -1017,7 +914,7 @@ def streaming_ingest_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     sink = StreamingIngestDedup(
         spark, tempfile.mkdtemp(prefix="ingest_state_")
     )
-    q = (
+    writer = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
@@ -1025,14 +922,8 @@ def streaming_ingest_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
         .option(
             "checkpointLocation", tempfile.mkdtemp(prefix="ingest_ck_")
         )
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("ingest stream did not drain")
+    _drain(writer, spark)
     return sink.candidate_pairs()
 
 
@@ -1087,7 +978,7 @@ def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame
         key_col="uid",
         vacuum_every=2,  # exercise manifest folding under the gate too
     )
-    q = (
+    writer = (
         spark.readStream.schema(
             "uid bigint, op string, ts bigint, seq bigint, "
             "value double, event_type string"
@@ -1098,14 +989,8 @@ def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame
         .option(
             "checkpointLocation", tempfile.mkdtemp(prefix="upsert_ck_")
         )
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("upsert stream did not drain")
+    _drain(writer, spark)
     return table.current().select(
         F.col("uid").alias("user_id"),
         F.col("value").alias("last_value"),
@@ -1142,7 +1027,7 @@ def streaming_stream_stream_full_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     # 'max' watermark policy scoped to the query-start window via
-    # extra_confs (see the left-join variant for why max is needed).
+    # the drain's confs (see the left-join variant for why max is needed).
     cutoff = F.lit("2024-01-25 00:00:00").cast("timestamp")
     purchases = (
         _events_stream(spark, sf_dir)
@@ -1171,20 +1056,10 @@ def streaming_stream_stream_full_join(
         & (F.col("c_ts") <= F.col("p_ts")),
         "full_outer",
     ).select("purchase_id", "click_id")
-
-    name = f"stream_q_{uuid.uuid4().hex[:12]}"
-    writer = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    return _drain_memory(
+        joined, spark, "append",
+        {"spark.sql.streaming.multipleWatermarkPolicy": "max"},
     )
-    _run_drained(
-        writer,
-        spark,
-        extra_confs={"spark.sql.streaming.multipleWatermarkPolicy": "max"},
-    )
-    return spark.table(name)
 
 
 @register(
@@ -1221,9 +1096,8 @@ def streaming_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .outputMode("complete")
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
     )
-    _run_drained(writer, spark)
+    _drain(writer, spark)
     st = read_state(spark, ck)
     # the streaming-agg state value stores the internal aggregation
     # buffer; count(1) buffers surface as field `count`
@@ -1299,7 +1173,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="uid",
         value_col="value",
     )
-    q = (
+    writer = (
         spark.readStream.schema(
             "uid bigint, ts bigint, seq bigint, value double"
         )
@@ -1307,14 +1181,8 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(d)
         .writeStream.foreachBatch(table.writer())
         .option("checkpointLocation", tempfile.mkdtemp(prefix="scd2_ck_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("scd2 stream did not drain")
+    _drain(writer, spark)
     return table.history().select(
         F.col("uid").alias("user_id"),
         "version",

@@ -22,18 +22,69 @@ query here:
                   barrier" semantics (reports/Streaming.pdf p.3)
 
 Sink format is the reference's ``key:value`` lines (leader.py:272).
+
+Starting and draining are written once, here, for every stream in the
+package (StreamJob and the streaming registry alike):
+
+- ``start_with_confs`` is the only place that sets session confs around
+  a query start. A streaming query captures its confs when it starts
+  (shuffle partitions become the state-partition count in the
+  checkpoint; the state-store provider is pinned likewise), so the pins
+  are set for the ``start()`` call only and the session is restored.
+- ``await_drained`` is the only drain: wait for an availableNow query
+  to finish, and stop it and raise if it does not.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 Op = Callable[[DataFrame], DataFrame]
+
+STATE_STORE_KEY = "spark.sql.streaming.stateStore.providerClass"
+STATE_STORE_PROVIDERS = {
+    "hdfs": "org.apache.spark.sql.execution.streaming."
+    "state.HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming."
+    "state.RocksDBStateStoreProvider",
+}
+
+
+def start_with_confs(
+    writer: DataStreamWriter, spark: SparkSession, confs: Mapping[str, str]
+) -> StreamingQuery:
+    """Start ``writer`` with ``confs`` set on the session, then restore
+    each key: a key that was unset before is unset again.
+
+    The window mutates session confs, so CONCURRENT starts on one
+    session could observe each other's pins. Start each concurrent
+    query from its own ``spark.newSession()``."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def await_drained(q: StreamingQuery, timeout_sec: int = 300) -> None:
+    """Wait for a draining (availableNow) query to terminate; a query
+    still active after ``timeout_sec`` is stopped and TimeoutError
+    raised."""
+    q.awaitTermination(timeout_sec)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"stream did not drain in {timeout_sec} s")
 
 
 class StreamJob:
@@ -60,6 +111,7 @@ class StreamJob:
         source: str = "files",
         max_bytes_per_trigger: int | None = None,
         max_source_file_bytes: int | None = None,
+        num_tasks: int | None = None,
     ):
         self.spark = spark
         self.input_dir = input_dir
@@ -72,7 +124,7 @@ class StreamJob:
         self.max_files_per_trigger = max_files_per_trigger
         self.max_bytes_per_trigger = max_bytes_per_trigger
         self.max_source_file_bytes = max_source_file_bytes
-        if state_store not in (None, "hdfs", "rocksdb"):
+        if state_store is not None and state_store not in STATE_STORE_PROVIDERS:
             raise ValueError(
                 f"state_store must be None, 'hdfs' or 'rocksdb'; got "
                 f"{state_store!r}"
@@ -81,6 +133,7 @@ class StreamJob:
         if source not in ("files", "tail"):
             raise ValueError(f"source must be 'files' or 'tail'; got {source!r}")
         self.source = source
+        self.num_tasks = num_tasks
 
     # ------------------------------------------------------------------
     def _source(self) -> DataFrame:
@@ -232,10 +285,13 @@ class StreamJob:
         local disk (SST files, changelog-checkpointed to the query
         checkpoint) instead of the default HDFS-backed in-memory map —
         the required backend once keyed state outgrows executor heap
-        (100 TB-scale running aggregations / dedup sets). The provider
-        class is a session conf captured at query START and pinned into
-        the checkpoint metadata by Spark, so it is set for the start
-        call and restored right after."""
+        (100 TB-scale running aggregations / dedup sets).
+
+        ``num_tasks`` is the reference's per-stage task count: it pins
+        ``spark.sql.shuffle.partitions`` for the start, so the stateful
+        stage's shuffle width (and state-partition count) is captured
+        into the checkpoint. Both pins go through start_with_confs; the
+        session keeps its own values."""
         df = self._transformed()
         writer = (
             df.writeStream.foreachBatch(self._write_batch)
@@ -246,31 +302,15 @@ class StreamJob:
             writer = writer.trigger(processingTime=processing_time)
         elif available_now:
             writer = writer.trigger(availableNow=True)
-        if self.state_store is None:
-            return writer.start()
-        key = "spark.sql.streaming.stateStore.providerClass"
-        provider = {
-            "hdfs": "org.apache.spark.sql.execution.streaming."
-            "state.HDFSBackedStateStoreProvider",
-            "rocksdb": "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        }[self.state_store]
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, provider)
-        try:
-            return writer.start()
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
+        confs = {}
+        if self.num_tasks is not None:
+            confs["spark.sql.shuffle.partitions"] = str(self.num_tasks)
+        if self.state_store is not None:
+            confs[STATE_STORE_KEY] = STATE_STORE_PROVIDERS[self.state_store]
+        return start_with_confs(writer, self.spark, confs)
 
     def run_to_completion(self, timeout_sec: int = 300) -> None:
-        q = self.start(available_now=True)
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover
-            q.stop()
-            raise TimeoutError("stream did not drain in time")
+        await_drained(self.start(available_now=True), timeout_sec)
 
     # ------------------------------------------------------------------
     def read_output(self) -> DataFrame:

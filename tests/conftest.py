@@ -56,6 +56,8 @@ GATE_MODULES = {
     "test_mlfeat",
     "test_advice_fixes",
     "test_r14_s2_ops",
+    "test_rainstorm_plans",
+    "test_streaming",
 }
 
 

@@ -39,18 +39,26 @@ def test_demo2_filter_eq_then_count(spark, tmp_path):
     # sample2: equality filter on col 6 + stateful count by col 8
     ind, outd = str(tmp_path / "in"), str(tmp_path / "out")
     _write(ind, "signs.csv", TRAFFIC)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    num_tasks = int(before) + 1  # differs from the session's by construction
     job = rainstorm(
         spark,
         'filter_eq 6 "Punched Telespar"',
         "count_by_column 8",
         ind,
         outd,
-        num_tasks=4,
+        num_tasks=num_tasks,
     )
     assert job.stateful
     job.run_to_completion()
     got = sorted(r.value for r in job.read_output().collect())
     assert got == ["Regulatory:2"]
+    # num_tasks is pinned for the query start only: the session keeps
+    # its own shuffle width, and the state store got num_tasks partitions
+    assert spark.conf.get(key) == before
+    state = os.path.join(job.checkpoint_dir, "state", "0")
+    assert len([p for p in os.listdir(state) if p.isdigit()]) == num_tasks
 
 
 def test_parse_op_rejects_unknown():

@@ -653,3 +653,51 @@ def test_files_source_oversized_file_raises(spark, tmp_path):
     )
     with pytest.raises(Exception, match="linetail"):
         job.run_to_completion()
+
+
+def test_start_with_confs_restores_session_confs(spark):
+    """The one start window restores every pinned key — a key set
+    before gets its old value back, an unset key is unset again — both
+    after a start that succeeds and after one that raises (a memory
+    sink without a queryName fails at start)."""
+    import pytest
+
+    from stream_processing_spark.streaming.job import start_with_confs
+
+    was_set = "spark.test.start_window.was_set"
+    was_unset = "spark.test.start_window.was_unset"
+    pins = {was_set: "pinned", was_unset: "pinned"}
+    rate = spark.readStream.format("rate").load()
+    spark.conf.set(was_set, "old")
+    try:
+        start_with_confs(rate.writeStream.format("noop"), spark, pins).stop()
+        assert spark.conf.get(was_set) == "old"
+        assert spark.conf.get(was_unset, None) is None
+
+        with pytest.raises(Exception, match="queryName"):
+            start_with_confs(rate.writeStream.format("memory"), spark, pins)
+        assert spark.conf.get(was_set) == "old"
+        assert spark.conf.get(was_unset, None) is None
+    finally:
+        spark.conf.unset(was_set)
+
+
+def test_await_drained_stops_a_stream_that_never_drains(spark):
+    """A processing-time query over an endless source never terminates:
+    the drain must stop it and raise instead of hanging."""
+    import pytest
+
+    from stream_processing_spark.streaming.job import await_drained
+
+    q = (
+        spark.readStream.format("rate").load()
+        .writeStream.format("noop")
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            await_drained(q, 1)
+        assert not q.isActive
+    finally:
+        q.stop()
