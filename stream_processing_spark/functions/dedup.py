@@ -164,10 +164,7 @@ def jaccard_pairs(
     # explode+distinct+df-cap pipeline per branch. One checkpoint = one
     # computation; reliable=True writes it to the context checkpoint dir
     # (shared storage on a cluster) so executor loss can't kill the query.
-    # eager: under a query's SINGLE final action a lazy checkpoint never
-    # materializes in time to dedupe all four branches (NOTES_r13
-    # eager-vs-lazy rule) — eager runs the corpus-sized explode ONCE
-    sh = materialize(sh, eager=True, reliable=reliable, checkpoint_dir=checkpoint_dir)
+    sh = materialize(sh, reliable=reliable, checkpoint_dir=checkpoint_dir)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc_a"), "sh")
     b = sh.select(F.col(id_col).alias("doc_b"), "sh")
@@ -224,9 +221,7 @@ def containment_pairs(
         sh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
     if max_df is not None:
         sh = cap_document_frequency(sh, max_df)
-    sh = materialize(  # eager: same one-scan rule as jaccard_pairs
-        sh, eager=True, reliable=reliable, checkpoint_dir=checkpoint_dir
-    )
+    sh = materialize(sh, reliable=reliable, checkpoint_dir=checkpoint_dir)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc_a"), "sh")
     b = sh.select(F.col(id_col).alias("doc_b"), "sh")
@@ -262,7 +257,17 @@ def minhash_signatures(
     """k min-hash values per doc. Hash family: md5 of a seed-prefixed
     shingle, min by lexicographic hex — identical in any engine with md5,
     which is exactly why it is md5 and not a native hash().
+
+    The signature is value-bearing, so ``sh`` must hold the shingle
+    STRINGS: a bigint (``shingles(hash64=True)``) column would be cast
+    to its decimal text and silently give different, non-portable
+    signatures, so it is rejected.
     """
+    if dict(sh.dtypes).get("sh") == "bigint":
+        raise ValueError(
+            "minhash_signatures needs string shingles, got a bigint sh "
+            "column: build it with shingles(..., hash64=False)"
+        )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("sh")))).alias(f"h{s}")
         for s in range(k)
@@ -361,8 +366,8 @@ def _simhash(
     The token hash is parsed in ONE ``conv(hex, 16, 10)`` → LONG cast
     per token instead of n_bits/4 per-digit instr(substring(...))
     extractions (r14: ~2 string ops per token instead of ~2·digits;
-    the fp-only interleaved A/B in tools/ab_simhash.py wins 4/5 and
-    the per-token CPU argument is unconditional). Bit b of that long
+    a fingerprint-only interleaved A/B won 4 of 5 pairs and the
+    per-token CPU argument is unconditional). Bit b of that long
     IS the old digit-decomposed bit b: digit d holds value
     (v >> 4·(digits−1−d)) & 15, so the old (d_{digits−1−b//4} >> b%4)
     & 1 ≡ (v >> b) & 1. The old ±1 CASE sums become plain bit sums
@@ -504,7 +509,7 @@ def simhash_pairs(
     # token explode + md5 + 60 bit sums) evaluated once per side. The
     # frame is 4 rows/doc of (id, fp, band, block) — checkpoint-tiny
     # next to what it derives from (one-scan rule, VERDICT r12 #1).
-    buckets = buckets.localCheckpoint(eager=True)
+    buckets = materialize(buckets)
     a = buckets.select(
         F.col(id_col).alias("doc_a"), F.col(fp_col).alias("fa"), "band", "byte"
     )

@@ -36,9 +36,10 @@ Three algorithms, same (node, component) output:
   baseline and the cheapest choice when components are known-shallow.
 
 Scale notes:
-- Lineage is cut every round (``localCheckpoint(eager=True)`` locally;
-  ``reliable=True`` swaps in reliable ``checkpoint`` to shared storage
-  so executor loss mid-iteration recovers instead of killing the query)
+- Lineage is cut every round (an eager ``runtime.materialize``:
+  ``localCheckpoint`` locally; ``reliable=True`` swaps in reliable
+  ``checkpoint`` to shared storage so executor loss mid-iteration
+  recovers instead of killing the query)
   — without it the plan doubles per iteration and round 10 recompiles
   a 2^10-deep DAG.
 - The convergence check is a driver-side scalar count per round —
@@ -83,11 +84,11 @@ def connected_components(
     """
     if algorithm not in ("auto", "star", "propagation"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
 
     def _cut(df: DataFrame) -> DataFrame:
-        return materialize(
-            df, eager=True, reliable=reliable, checkpoint_dir=checkpoint_dir
-        )
+        return materialize(df, reliable=reliable, checkpoint_dir=checkpoint_dir)
 
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if algorithm == "star":
@@ -99,14 +100,6 @@ def connected_components(
     budget = max_iter if algorithm == "propagation" else min(
         _AUTO_SWITCH_AFTER, max_iter
     )
-    if budget < 1:  # degenerate: no rounds allowed — identity labels
-        if stats is not None:
-            stats["rounds"] = 0
-        return (
-            sym.select(F.col("a").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("component"))
-        )
     # ROUND-1 SHORTCUT (r14, bit-identical by construction — the same
     # class as LPA's round-0 min-neighbor shortcut): labels start as
     # the identity, so round 1's min(label over neighbors ∪ self) IS

@@ -64,6 +64,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stream_processing_spark import runtime
+
 __all__ = ["range_prefix_sum"]
 
 
@@ -101,15 +103,14 @@ def range_prefix_sum(
     The fold is exact for integer/DECIMAL inputs — use those (registry
     determinism rule: never accumulate raw doubles).
 
-    ``materialize`` (default True) eagerly ``localCheckpoint``s the
-    input before the scan fans it into its three internal branches
-    (key-extent stats, local scans, bucket subtotals), so the
-    aggregation that produced the histogram runs ONCE instead of once
-    per branch — at 100 TB each re-evaluation is a full corpus re-scan
-    (VERDICT r12 weak #1; the eager-vs-lazy rule in NOTES_r13: lazy
-    never materializes in time to dedupe branches under a single final
-    action). Pass ``materialize=False`` when the CALLER has already
-    checkpointed the frame — e.g. because it also feeds a caller-side
+    ``materialize`` (default True) puts the input behind an eager
+    ``runtime.materialize`` barrier before the scan fans it into its
+    three internal branches (key-extent stats, local scans, bucket
+    subtotals), so the aggregation that produced the histogram runs
+    ONCE instead of once per branch — at 100 TB each re-evaluation is a
+    full corpus re-scan (VERDICT r12 weak #1). Pass
+    ``materialize=False`` when the CALLER has already checkpointed the
+    frame — e.g. because it also feeds a caller-side
     total/extent branch, which an operator-internal checkpoint cannot
     dedupe — so the frame isn't copied twice. Either way the input
     MUST be materialized before the scan (that contract is what makes
@@ -132,7 +133,7 @@ def range_prefix_sum(
     two-pass scan (the property tests exercise it directly).
     """
     if materialize:
-        df = df.localCheckpoint(eager=True)
+        df = runtime.materialize(df)
     if num_partitions is None:
         num_partitions = df.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "32"

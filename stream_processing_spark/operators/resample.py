@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stream_processing_spark.runtime import materialize
+
 
 def resample_ffill(
     df: DataFrame,
@@ -54,8 +56,8 @@ def resample_ffill(
     # densify join; eager checkpoint runs the event-sized aggregation
     # once (the frame is key x buckets — already reduced), instead of
     # once per branch (r13 one-scan rule)
-    per_bucket = (
-        df.groupBy(F.col(key_col), bucket).agg(*aggs).localCheckpoint(eager=True)
+    per_bucket = materialize(
+        df.groupBy(F.col(key_col), bucket).agg(*aggs)
     )
     bounds = per_bucket.groupBy(key_col).agg(
         F.min("bucket_ts").alias("__lo"), F.max("bucket_ts").alias("__hi")

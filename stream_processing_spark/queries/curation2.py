@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------------ decontamination
 
@@ -68,7 +69,12 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _NGRAM_N
     length = F.size(toks)
     zipped = F.arrays_zip(*[F.slice(toks, j + 1, length - (n - 1)) for j in range(n)])
-    grams = (
+    # feeds the train-set and eval-set branches: the barrier dedupes the
+    # corpus ngram+distinct SHUFFLE across the two branches (unlike the
+    # map-only exact-substring fingerprint pass, re-running this costs a
+    # full corpus exchange) — and the frame is distinct (doc, 8-byte
+    # gram) rows, 60% smaller than the r13 md5 spelling
+    grams = materialize(
         docs.filter(length >= n)
         .select("doc_id", split.alias("split"), F.explode(zipped).alias("__z"))
         .select(
@@ -78,8 +84,8 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ship + count; never output — the oracle hashes its own
             # side), so xxhash64 replaces md5: cheaper per-token map
             # and 8-byte keys through the distinct, checkpoint and
-            # join (tools/ab_fp_hash.py: wins every pair, min 2.32 →
-            # 1.84; same collision class as the shingle hashing, gate-
+            # join (interleaved A/B: wins every pair, min 2.32 → 1.84
+            # s; same collision class as the shingle hashing, gate-
             # verified ×3 SF). The SPLIT rule's md5(text) is value-
             # bearing (mirrored by the oracle) and stays md5.
             F.xxhash64(
@@ -87,13 +93,6 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("g"),
         )
         .distinct()
-        # feeds the train-set and eval-set branches: eager checkpoint
-        # dedupes the corpus ngram+distinct SHUFFLE across the two
-        # branches (unlike the map-only exact-substring fingerprint
-        # pass, re-running this costs a full corpus exchange) — and
-        # the frame is distinct (doc, 8-byte gram) rows, 60% smaller
-        # than the r13 md5 spelling
-        .localCheckpoint(eager=True)
     )
     train_grams = grams.filter(F.col("split") == "train").select("g").distinct()
     eval_grams = grams.filter(F.col("split") == "eval").select("doc_id", "g")
@@ -335,14 +334,14 @@ def _bm25_scored(docs: DataFrame) -> DataFrame:
         return F.size(F.filter(arr, lambda x: x == term))
 
     t = F.split(F.col("text"), " ")
-    per_doc = docs.select(
+    per_doc = materialize(docs.select(
         "doc_id",
         F.size(t).alias("L"),
         *[
             _tf_count(t, term).alias(f"tf{i}")
             for i, term in enumerate(_BM25_TERMS)
         ],
-    ).localCheckpoint(eager=True)
+    ))
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("L").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -806,13 +805,13 @@ def _doc_avg_bigram_p(docs: DataFrame) -> DataFrame:
     toks = F.split(F.col("text"), " ")
     length = F.size(toks)
     zipped = F.arrays_zip(F.slice(toks, 1, length - 1), F.slice(toks, 2, length - 1))
-    # r14 (guide §2.3, §5; interleaved A/B in tools/ab_qualitylm.py —
-    # wins every pair): bigrams travel as 64-bit xxhash64 keys, never
-    # strings — everything downstream uses the bigram and its first
-    # word only for EQUALITY (count groups, window partition, prob
-    # join), so hashing preserves the exact counts/probs up to the
-    # same ~2⁻⁶⁵-per-pair collision class as the dedup shingle hashing
-    # (gate-verified bit-equal at all test SFs). The O(corpus) eager
+    # r14 (guide §2.3, §5; an interleaved A/B won every pair): bigrams
+    # travel as 64-bit xxhash64 keys, never strings — everything
+    # downstream uses the bigram and its first word only for EQUALITY
+    # (count groups, window partition, prob join), so hashing preserves
+    # the exact counts/probs up to the same ~2⁻⁶⁵-per-pair collision
+    # class as the dedup shingle hashing (gate-verified bit-equal at
+    # all test SFs). The O(corpus) eager
     # checkpoint is gone with them (the heaps lesson: pinning a
     # corpus-sized frame in executor storage costs more than streaming
     # the explode twice); the LM-build window stays on the
@@ -978,7 +977,7 @@ def token_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token") != "")
         .distinct()
     )
-    toks = toks.localCheckpoint(eager=True)  # df build + both join sides (eager: single-action dedupe)
+    toks = materialize(toks)  # df build + both join sides
     tok_df = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     # top-k by orderBy+limit → TakeOrderedAndProject (partial top-k per
     # partition, no global sort/window — the shape that survives a huge
@@ -1238,9 +1237,9 @@ def user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     # the level histogram feeds the scan AND the totals: eager
     # checkpoint runs the per-user aggregation once (r13 one-scan rule)
-    levels = per_user.groupBy("n").agg(
+    levels = materialize(per_user.groupBy("n").agg(
         F.count(F.lit(1)).alias("k")
-    ).localCheckpoint(eager=True)
+    ))
     tot = levels.agg(
         F.sum("k").alias("nu"),
         F.sum(F.col("n").cast("decimal(38,0)") * F.col("k")).alias(

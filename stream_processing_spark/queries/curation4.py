@@ -24,6 +24,7 @@ from stream_processing_spark.catalog import load_table
 from stream_processing_spark.functions import similarity as sim
 from stream_processing_spark.queries import register
 from stream_processing_spark.queries._util import dec
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------------- PII redaction
 
@@ -375,8 +376,8 @@ def cross_source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint is equality-only (it feeds one groupBy and never the
     # output — the oracle hashes its own side), so xxhash64 replaces
     # md5: ~½ the map CPU and 8-byte group keys instead of 32-hex
-    # strings (tools/ab_fp_hash.py: md5 [1.11,1.11,1.10] vs xxhash64
-    # [0.98,0.97,0.88], results identical; same 64-bit collision class
+    # strings (interleaved A/B: md5 [1.11,1.11,1.10] s vs xxhash64
+    # [0.98,0.97,0.88] s, results identical; same 64-bit collision class
     # as the dedup shingle hashing, gate-verified ×3 SF).
     docs = rebalance_for_expansion(load_table(spark, sf_dir, "documents"))
     spans = (
@@ -413,14 +414,13 @@ def cross_source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(srcs, x -> "
         "struct(x AS source_a, CAST(NULL AS STRING) AS source_b)))"
     )
-    counts = (
+    counts = materialize(
         grouped.select(F.explode(items).alias("p"))
         .groupBy(
             F.col("p.source_a").alias("source_a"),
             F.col("p.source_b").alias("source_b"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     pairs = counts.filter(F.col("source_b").isNotNull()).select(
         "source_a", "source_b", F.col("n").alias("shared_spans")
@@ -1168,9 +1168,9 @@ def vocab_oov_rate_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the explode once: it feeds BOTH the vocab aggregation
     # and the probe side of the join (an unshared subtree would scan +
     # explode the corpus twice)
-    tok = docs.select(
+    tok = materialize(docs.select(
         "source", F.explode(F.split("text", " ")).alias("t")
-    ).localCheckpoint(eager=True)  # eager: single-action dedupe
+    ))
     vocab = (
         tok.groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))

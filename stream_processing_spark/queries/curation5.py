@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
-from stream_processing_spark.runtime import rebalance_for_expansion
+from stream_processing_spark.runtime import materialize, rebalance_for_expansion
 
 # Gopher thresholds use the most-frequent-gram char fraction for
 # n=2..4 and the duplicated-gram char fraction for n=5..8 (the paper
@@ -280,7 +280,7 @@ def quality_gopher_line_para_dedup(
         f"array_join(transform(slice(xs, pid * {_LINES_PER_PARA} + 1, "
         f"{_LINES_PER_PARA}), x -> x.line), '\\n')"
     )
-    page = arr.select(
+    page = materialize(arr.select(
         "grp",
         F.expr(
             f"""array_join(flatten(transform(
@@ -289,7 +289,7 @@ def quality_gopher_line_para_dedup(
                             THEN array({para_sql}, {para_sql})
                             ELSE array({para_sql}) END)), '\\n\\n')"""
         ).alias("text"),
-    ).localCheckpoint(eager=True)  # feeds the line AND paragraph branches (eager: single-action dedupe)
+    ))  # feeds the line AND paragraph branches
 
     def _unit_agg(unit_col: str, sep: str, prefix: str) -> DataFrame:
         occ = page.select(

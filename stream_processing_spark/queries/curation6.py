@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # --------------------------------------------------------------------
 # exact-substring dedup (Lee et al. 2022)
@@ -128,7 +129,7 @@ def exact_substring_spans(docs: DataFrame, k: int = _ESS_K) -> DataFrame:
 
     # the window-fingerprint map is one hash per token — compute-bound;
     # spread a small scan's rows across cores first. r14 (guide §2.3,
-    # §5; interleaved A/B in tools/ab_fp_hash.py): the fingerprint is
+    # §5; interleaved A/B): the fingerprint is
     # EQUALITY-ONLY (hot-set count + join-back; the outputs are counts
     # and positions), so xxhash64 replaces md5 — same results up to
     # the standard 64-bit collision class (gate-verified bit-equal at
@@ -639,12 +640,11 @@ def unigram_encode_source_stats(
     # by cnt — previously the corpus was exploded twice (once for the
     # vocab, once for the occurrence stats). All integer sums, so the
     # regrouped totals are bit-identical (guide §2.3/§2.4).
-    hist = (
+    hist = materialize(
         docs.select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= _ULM_MAX_WORD))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     words = hist.groupBy("w").agg(
         F.sum("cnt").cast("bigint").alias("freq")
@@ -753,8 +753,6 @@ def train_quality_classifier(
     Returns (weights DataFrame(bucket, w DECIMAL), bias float, n_docs).
     n_docs counts docs WITH FEATURES (all-whitespace texts produce no
     feats rows), which is the gate the oracle uses for the bias row."""
-    from stream_processing_spark.runtime import materialize
-
     feats = materialize(_clf_features(docs), eager=False)
     n_docs = feats.select("doc_id").distinct().count()
     weights = feats.select("bucket").distinct().select(
@@ -1103,11 +1101,10 @@ def changepoint_cusum_daily_events(
 ) -> DataFrame:
     # day-cardinality aggregate feeds BOTH the mu/sigma stats and the
     # z-walk: eager checkpoint scans events once (r13 one-scan rule)
-    daily = (
+    daily = materialize(
         load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
     )
     stats = daily.agg(
         (F.sum("n").cast("double") / F.count(F.lit(1))).alias("mu"),
@@ -1322,10 +1319,9 @@ def mixture_temperature_resample(
     # the weight frame — four corpus aggregations without a cut; eager
     # checkpoint runs the scan once (lang-domain rows, tiny). The only
     # other corpus pass is the final per-doc copies join — the minimum.
-    per_lang = (
+    per_lang = materialize(
         docs.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint(eager=True)
     )
     tot = per_lang.agg(F.sum("n_docs").cast("bigint").alias("total"))
     s = per_lang.select(

@@ -20,6 +20,7 @@ from stream_processing_spark.queries.llmops import (
     _JACCARD_MAX_DF,
     _SHINGLE_SQL,
 )
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------- BM25F multi-field
 
@@ -126,7 +127,7 @@ def bm25f_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read the source twice and contradicted this docstring). The
     # tagged frame is eager-checkpointed because it feeds the per-field
     # stats, the term frequencies, AND the doc count (one-scan rule).
-    fields = (
+    fields = materialize(
         docs.select(
             "doc_id",
             F.explode(
@@ -152,7 +153,6 @@ def bm25f_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("f.toks").alias("toks"),
         )
         .withColumn("L", F.size("toks"))
-        .localCheckpoint(eager=True)
     )
     avglens = fields.groupBy("fld").agg(
         (F.sum("L").cast("double") / F.count(F.lit(1))).alias("avgl")
@@ -281,7 +281,7 @@ def dedup_cc_survivor_map(
     # final member join, and without the checkpoint the docs ⋈ cc
     # subtree (including its parquet scan) evaluated once per branch
     # (r13 opt: plan went 6 parquet scans -> 2).
-    clusters = (
+    clusters = materialize(
         docs.select("doc_id", "n_chars")
         .join(cc, docs.doc_id == cc.node, "left")
         .select(
@@ -289,7 +289,6 @@ def dedup_cc_survivor_map(
             F.coalesce("component", "doc_id").alias("cluster_id"),
             "n_chars",
         )
-        .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc_nulls_last("n_chars"), F.asc("doc_id")
@@ -499,7 +498,7 @@ def langid_trigram_cosine_mix(
         .filter(F.col("text").isNotNull() & (F.length("text") >= 3))
         .select("doc_id", F.lower("text").alias("t"))
     )
-    # r14 (guide §4.2, r13 verdict item 3 — A/B'd in tools/ab_langid.py):
+    # r14 (guide §4.2, r13 verdict item 3 — interleaved A/B):
     # the trigram explode + (doc, tri) count + profile join + per-doc
     # fold shuffled a corpus × ~300-char frame twice; every doc-level
     # quantity the query needs is computable from the doc's own bytes,

@@ -24,9 +24,11 @@ from stream_processing_spark.queries.mlfeat import (
     _KM_CENSOR_DAYS,
     _PSI_ORACLE_SQL,
     _SPLIT_SQL,
+    _drift_monitor,
     _psi_from_hist,
     _split_halves,
 )
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------ Mann-Whitney U drift
 
@@ -253,7 +255,7 @@ def cuped_adjusted_ab_metric(
     # aggregation pass over the per-user frame; `v` is a 2-row frame,
     # so its eager checkpoint is free and stops the corpus re-running
     # for the pooled fold.
-    v = (
+    v = materialize(
         per_user.groupBy("variant")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
@@ -266,7 +268,6 @@ def cuped_adjusted_ab_metric(
                 "sxxd"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     g = v.agg(
         F.sum("n_users").cast("bigint").alias("n"),
@@ -388,7 +389,12 @@ def spearman_quantity_price(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    joint = (
+    # the joint histogram feeds FIVE branches (two marginals, each with
+    # the prefix scan's extent/local subplans, plus the final moment
+    # join); sf0.1 wall 10.1 s → 4.8 s when this barrier landed (r12
+    # d65e9ff); the marginal frames qh/ph below materialize inside
+    # range_prefix_sum (r13 default)
+    joint = materialize(
         li.filter(
             F.col("l_quantity").isNotNull()
             & F.col("l_extendedprice").isNotNull()
@@ -401,14 +407,6 @@ def spearman_quantity_price(
         )
         .groupBy("q", "p")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # the joint histogram feeds FIVE branches (two marginals, each
-        # with the prefix scan's extent/local subplans, plus the final
-        # moment join): EAGER checkpoint computes it once — lazy never
-        # materializes before the single final action (the LPA r12
-        # profile lesson); sf0.1 wall 10.1 s → 4.8 s when this landed
-        # (r12 d65e9ff); the marginal frames qh/ph below materialize
-        # inside range_prefix_sum (r13 default)
-        .localCheckpoint(eager=True)
     )
     # marginal rank maps: the price-cents marginal GROWS with data until
     # it saturates its ~10M-cent domain, so its cumulative must not be a
@@ -741,59 +739,4 @@ def chi2_event_type_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_psi_drift_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import datetime as _dt
-
-    from stream_processing_spark.queries.streaming_queries import (
-        _drain_memory,
-        _events_stream,
-    )
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    day_hist = (
-        ev.groupBy(
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-            F.to_date("ts").alias("d"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .persist()
-    )
-    bounds = day_hist.agg(
-        F.min("d").alias("d0"), F.max("d").alias("d1")
-    ).collect()[0]
-    if bounds["d0"] is None:
-        dmid = None
-    else:
-        dmid = bounds["d0"] + _dt.timedelta(
-            days=(bounds["d1"] - bounds["d0"]).days // 2
-        )
-    dmid_lit = F.lit(dmid).cast("date")
-    ref = (
-        day_hist.filter(F.col("d") <= dmid_lit)
-        .groupBy("cents")
-        .agg(F.sum("cnt").cast("bigint").alias("ca"))
-    )
-    live = (
-        _events_stream(spark, sf_dir)
-        .filter(
-            F.col("value").isNotNull()
-            & ~F.coalesce(F.to_date("ts") <= dmid_lit, F.lit(False))
-        )
-        .groupBy(
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
-    )
-    drained = _drain_memory(live, spark, "complete")
-    hist = ref.join(drained, "cents", "full_outer").select(
-        "cents",
-        F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
-        F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
-    )
-    # eager-materialize the (≤10-row) report, then release the cached
-    # control-period histogram — the persist-without-unpersist leaked
-    # one cache per monitor call into long-lived sessions (ADVICE r11)
-    out = _psi_from_hist(hist).localCheckpoint(eager=True)
-    day_hist.unpersist()
-    return out
+    return _drift_monitor(spark, sf_dir, _psi_from_hist)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------------ Kendall tau-b
 
@@ -85,7 +86,10 @@ def kendall_tau_quantity_discount(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    cells = (
+    # the joint histogram feeds FIVE branches (both pair-join sides,
+    # both tie marginals, the total); the frame is ≤ ~550²
+    # domain-bounded cells, checkpoint-tiny
+    cells = materialize(
         li.filter(
             F.col("l_quantity").isNotNull()
             & F.col("l_discount").isNotNull()
@@ -96,11 +100,6 @@ def kendall_tau_quantity_discount(
         )
         .groupBy("q", "d")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # the joint histogram feeds FIVE branches (both pair-join
-        # sides, both tie marginals, the total): eager checkpoint runs
-        # the corpus aggregation once (r13 one-scan rule; the frame is
-        # ≤ ~550² domain-bounded cells, checkpoint-tiny)
-        .localCheckpoint(eager=True)
     )
     a = cells.alias("a")
     b = cells.alias("b")
@@ -572,14 +571,14 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dated = ev.filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    firsts = dated.groupBy("user_id").agg(
+    # feeds the cohort-size rollup AND the revenue join: the barrier
+    # runs the per-user first-event scan once (one row per user; r13
+    # one-scan rule)
+    firsts = materialize(dated.groupBy("user_id").agg(
         (
             F.year(F.min("ts")) * 12 + F.month(F.min("ts"))
         ).alias("cm")
-    # feeds the cohort-size rollup AND the revenue join: eager
-    # checkpoint runs the per-user first-event scan once (one row per
-    # user; r13 one-scan rule)
-    ).localCheckpoint(eager=True)
+    ))
     sizes = firsts.groupBy("cm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
@@ -782,12 +781,14 @@ def winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the histogram feeds four branches (total, the prefix scan's
     # extent/local subplans, the clamped fold): eager checkpoint
     # computes the corpus aggregation once (LPA r12 profile lesson)
-    hist = orders.filter(F.col("o_totalprice").isNotNull()).groupBy(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")).localCheckpoint(
-        eager=True
+    hist = materialize(
+        orders.filter(F.col("o_totalprice").isNotNull())
+        .groupBy(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+            .alias("c")
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     nn = hist.agg(F.sum("cnt").cast("bigint").alias("n"))
     cum = range_prefix_sum(
@@ -1021,12 +1022,10 @@ def grouped_value_percentiles(
     # the (type, cents) histogram feeds the per-type totals AND the
     # grouped scan's branches: eager checkpoint runs the corpus
     # aggregation once (r13 one-scan rule, VERDICT r12 weak #1)
-    hist = ev.groupBy(
+    hist = materialize(ev.groupBy(
         F.coalesce("event_type", F.lit("(null)")).alias("etype"),
         F.floor(F.col("value") * 100).cast("bigint").alias("c"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")).localCheckpoint(
-        eager=True
-    )
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
     # each type's cents histogram saturates the value domain at scale,
     # so the per-type cumulative uses the GROUPED prefix scan (buckets
     # within each type — parallelism beyond the 5-type domain) and the
@@ -1505,12 +1504,14 @@ def median_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the price histogram feeds the rank broadcast AND the prefix
     # scan's branches: eager checkpoint runs the corpus aggregation
     # once (r13 one-scan rule, VERDICT r12 weak #1)
-    hist = orders.filter(F.col("o_totalprice").isNotNull()).groupBy(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")).localCheckpoint(
-        eager=True
+    hist = materialize(
+        orders.filter(F.col("o_totalprice").isNotNull())
+        .groupBy(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+            .alias("c")
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     nn = hist.agg(F.sum("cnt").cast("bigint").alias("n"))
     n = F.col("n")
@@ -1623,9 +1624,9 @@ def lorenz_user_activity_deciles(
     )
     # the activity-level histogram feeds the scan AND the totals: eager
     # checkpoint runs the per-user aggregation once (r13 one-scan rule)
-    levels = per_user.groupBy("n").agg(
+    levels = materialize(per_user.groupBy("n").agg(
         F.count(F.lit(1)).cast("bigint").alias("k")
-    ).localCheckpoint(eager=True)
+    ))
     cum = range_prefix_sum(
         levels.withColumn("ev", F.col("n") * F.col("k")),
         "n",

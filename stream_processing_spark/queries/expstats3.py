@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.operators.sessionize import with_sessions
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------- t-digest quantiles
 
@@ -121,11 +122,9 @@ def tdigest_value_quantiles(
     # the histogram feeds the total AND the prefix scan's branches:
     # eager checkpoint runs the corpus aggregation once (r13 one-scan
     # rule, VERDICT r12 weak #1)
-    hist = ev.groupBy(
+    hist = materialize(ev.groupBy(
         F.floor(F.col("value") * 100).cast("bigint").alias("c")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")).localCheckpoint(
-        eager=True
-    )
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
     nn = hist.agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n")
     )
@@ -254,13 +253,12 @@ def seasonal_mann_kendall_weekday(
     )
     # day-domain-bounded frame, referenced by pairs (twice), seasons
     # and ties: eager checkpoint runs the corpus aggregation once
-    daily = (
+    daily = materialize(
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select(
             "day", F.weekday("day").cast("bigint").alias("dow"), "x"
         )
-        .localCheckpoint(eager=True)
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(
@@ -436,7 +434,7 @@ def quantile_regression_pinball(
     # pre-rewrite 6.2×/dec was the 11× row expansion, not a hidden
     # quadratic). Eager checkpoint: the histogram feeds the moments
     # AND the residual expansion.
-    hist0 = (
+    hist0 = materialize(
         li.select(
             F.col("l_quantity").cast("double").alias("xq"),
             (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
@@ -445,7 +443,6 @@ def quantile_regression_pinball(
         )
         .groupBy("xq", "yc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     xd = F.col("xq").cast("decimal(12,2)")
     st = hist0.agg(
@@ -470,14 +467,14 @@ def quantile_regression_pinball(
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     # the 1-row fit feeds the candidate grid, the median ranks AND the
     # final output row: eager checkpoint runs the moment fold once
-    fit = st.select(
+    fit = materialize(st.select(
         "n",
         F.round(
             (n * F.col("sxy") - sx * sy)
             / F.nullif(n * F.col("sxx") - sx * sx, F.lit(0.0)),
             6,
         ).alias("rs"),
-    ).localCheckpoint(eager=True)
+    ))
     cand = (
         fit.filter(F.col("rs").isNotNull())
         .select(
@@ -787,7 +784,7 @@ def _funnel_frames(spark: SparkSession, sf_dir: str):
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    s = (
+    s = materialize(
         with_sessions(
             ev,
             "user_id",
@@ -796,7 +793,6 @@ def _funnel_frames(spark: SparkSession, sf_dir: str):
             order_cols=["ts", "event_id"],
         )
         .select("user_id", "session_seq", "event_type", "ts")
-        .localCheckpoint(eager=True)
     )
     key = ["user_id", "session_seq"]
     s1 = (
@@ -931,12 +927,11 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct-user frame feeds BOTH the sketch top-k and the exact
     # count: aggregate the corpus to it once behind an eager checkpoint
     # (r13 one-scan rule — previously each branch re-scanned events)
-    du = (
+    du = materialize(
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("user_id")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     v48 = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 12),
@@ -1114,10 +1109,10 @@ def cramer_von_mises_drift(
     from stream_processing_spark.queries.mlfeat import _split_halves
 
     vals = _split_halves(spark, sf_dir)
-    hist = vals.groupBy("cents").agg(
+    hist = materialize(vals.groupBy("cents").agg(
         F.sum("in_a").cast("bigint").alias("ca"),
         F.sum(1 - F.col("in_a")).cast("bigint").alias("cb"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = hist.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum("cb").cast("bigint").alias("nb"),
@@ -1254,9 +1249,9 @@ def funnel_time_to_convert(
     )
     # duration-domain-bounded histogram feeds the total AND the rank
     # walk: eager checkpoint (r13 one-scan rule)
-    hist = conv.groupBy("sec").agg(
+    hist = materialize(conv.groupBy("sec").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
-    ).localCheckpoint(eager=True)
+    ))
     nn = hist.agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n")
     )
@@ -1767,7 +1762,7 @@ def classifier_calibration_ece(
     )
     # the 10-bin frame feeds the ECE fold AND the per-bin report:
     # eager checkpoint runs the corpus scoring scan once (r13 rule)
-    binned = binned.localCheckpoint(eager=True)
+    binned = materialize(binned)
     tot = binned.agg(F.sum("n_docs").cast("bigint").alias("nn"))
     e = binned.crossJoin(F.broadcast(tot)).agg(
         F.round(
@@ -1864,7 +1859,7 @@ def james_stein_type_means(
         F.sum(y).cast("double").alias("s1"),
         F.sum((y * y).cast("decimal(38,4)")).cast("double").alias("s2"),
     )
-    m = g.select(
+    m = materialize(g.select(
         "event_type",
         "n",
         F.round(F.col("s1") / F.col("n"), 9).alias("mean_r"),
@@ -1876,7 +1871,7 @@ def james_stein_type_means(
             )
             / F.col("n"),
         ).alias("se2"),
-    ).localCheckpoint(eager=True)
+    ))
     gr = m.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         (
@@ -2019,7 +2014,7 @@ def logrank_lifetime_by_cohort(
         "last_day",
     )
     horizon = ev.agg(F.max(F.to_date("ts")).alias("hmax"))
-    marked = users.crossJoin(F.broadcast(horizon)).select(
+    marked = materialize(users.crossJoin(F.broadcast(horizon)).select(
         "grp",
         "lt",
         F.when(
@@ -2027,7 +2022,7 @@ def logrank_lifetime_by_cohort(
         )
         .otherwise(0)
         .alias("censored"),
-    ).localCheckpoint(eager=True)
+    ))
     lev = marked.groupBy("lt").agg(
         F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))
         .cast("bigint")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------------- sparse cosine pairs
 
@@ -99,7 +100,9 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = sh.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = (
+    # the postings frame feeds three branches (norms + both join sides);
+    # the barrier shares the tokenize+tf+df pass
+    w = materialize(
         tf.join(dfreq.where(F.col("df") <= _SC_MAX_DF), "g")
         .select(
             "doc_id",
@@ -108,10 +111,6 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(9,6)")
             .alias("w"),
         )
-        # the postings frame feeds three branches (norms + both join
-        # sides); EAGER checkpoint shares the tokenize+tf+df pass (lazy
-        # never dedupes under the single final action — NOTES_r13)
-        .localCheckpoint(eager=True)
     )
     nrm = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("nrm")
@@ -217,7 +216,7 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("out_deg"))
-    ew = edges.join(deg, "u").localCheckpoint(eager=False)
+    ew = materialize(edges.join(deg, "u"), eager=False)
     nodes = li.select(F.col("l_partkey").alias("part_id")).distinct()
 
     ranks = nodes.select("part_id", F.lit(_PR_SCALE).alias("r"))

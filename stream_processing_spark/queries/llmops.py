@@ -17,6 +17,7 @@ from stream_processing_spark.functions import dedup as dd
 from stream_processing_spark.functions import similarity as sim
 from stream_processing_spark.functions import text as tx
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ---------------------------------------------------------------- dedup
 
@@ -1140,8 +1141,7 @@ def dedup_incremental_new_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFra
     sigs = dd.minhash_signatures(sh, k=8).join(
         docs.select("doc_id", "source"), "doc_id"
     )
-    # eager: single-final-action query — lazy never dedupes (NOTES_r13)
-    sigs = sigs.localCheckpoint(eager=True)  # feeds bucket + 2 verify branches
+    sigs = materialize(sigs)  # feeds bucket + 2 verify branches
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1233,7 +1233,7 @@ def dedup_incremental_new_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFra
 def dedup_survivors_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(dd.shingles(docs, n=3, distinct=False), k=8)
-    sigs = sigs.localCheckpoint(eager=True)  # eager: single-action dedupe
+    sigs = materialize(sigs)
     cand = dd.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1391,7 +1391,6 @@ _PIPE_SHINGLE_ON_S4 = _SHINGLE_SQL.replace("WITH toks", "toks").replace(
     "pass, and the stage-5 anti-join.",
 )
 def curation_pipeline_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stream_processing_spark.runtime import materialize
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1481,7 +1480,7 @@ _sim_agree = " + ".join(
 def similar_docs_minhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(dd.shingles(docs, n=3, distinct=False), k=8)
-    sigs = sigs.localCheckpoint(eager=True)  # query row + candidates (eager: single-action dedupe)
+    sigs = materialize(sigs)  # query row + candidates
     q = sigs.where(F.col("doc_id") == _SIM_QUERY_DOC).select(
         *[F.col(f"h{s}").alias(f"q{s}") for s in range(8)]
     )
@@ -1535,7 +1534,7 @@ _sim_band_match = " OR ".join(f"c.h{s} = q.h{s}" for s in range(8))
 def similar_docs_lsh_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(dd.shingles(docs, n=3, distinct=False), k=8)
-    banded = sigs.localCheckpoint(eager=True)  # eager: single-action dedupe
+    banded = materialize(sigs)
     q = banded.where(F.col("doc_id") == _SIM_QUERY_DOC).select(
         *[F.col(f"h{s}").alias(f"q{s}") for s in range(8)],
     )
@@ -1779,7 +1778,6 @@ def retrieval_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(_MMR_DEPTH)
     )
-    from stream_processing_spark.runtime import materialize
 
     cand = materialize(cand, eager=False)
     a = cand.select(
@@ -1888,8 +1886,6 @@ def retrieval_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shingle set and are absent by definition (both engines).",
 )
 def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stream_processing_spark.runtime import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     # hash64: the novelty fold uses the shingle only for grouping
     # (min-holder per sh) — 16-byte rows through the distinct, the
@@ -1985,8 +1981,6 @@ def _src_sig_sql() -> str:
     "feeds signatures, sizes, and the pair join.",
 )
 def source_similarity_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stream_processing_spark.runtime import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     sh = materialize(
         dd.shingles(docs, n=3, id_col="source"), eager=True

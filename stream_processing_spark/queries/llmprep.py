@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.queries import register
+from stream_processing_spark.runtime import materialize
 
 # ------------------------------------------- context-window packing
 
@@ -238,7 +239,7 @@ def dpo_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches: eager checkpoint runs the corpus explode + per-doc
     # aggregation + windows once (r13 one-scan rule — previously each
     # branch re-evaluated the whole token pipeline from the scan)
-    ranked = scored.select(
+    ranked = materialize(scored.select(
         "lang_g",
         "source",
         "doc_id",
@@ -250,7 +251,7 @@ def dpo_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(grp.orderBy(F.asc("score"), F.asc("doc_id")))
         .alias("rw"),
         F.count(F.lit(1)).over(grp).alias("n_docs"),
-    ).localCheckpoint(eager=True)
+    ))
     best = ranked.filter(
         (F.col("rb") == 1) & (F.col("n_docs") >= 2)
     ).select(
@@ -519,7 +520,7 @@ def corpus_js_divergence_sources(
     # NULL, so a NULL-source token can never reach any output pair.
     # Eager checkpoint: the histogram feeds the per-token pivot AND
     # the totals (r13 one-scan rule; (sources × vocab)-bounded).
-    hist = (
+    hist = materialize(
         docs.filter(F.col("source").isNotNull())
         .select(
             "source", F.explode(F.split("text", " ")).alias("tok")
@@ -527,7 +528,6 @@ def corpus_js_divergence_sources(
         .filter(F.col("tok") != "")
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     totals = hist.groupBy("source").agg(
         F.sum("cnt").cast("bigint").alias("total")

@@ -643,7 +643,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized: the cells frame feeds BOTH pair-join sides and the
     # stats scan — re-evaluating the sqrt(N)-cell assignment (an
     # O(N·cells·dim) map pass) three times dominated the sf1 wall
-    cells = materialize(_cluster_cells(spark, sf_dir), eager=True)  # eager: single-action dedupe
+    cells = materialize(_cluster_cells(spark, sf_dir))
     drops = _semantic_drop_ids(cells).withColumn("__d", F.lit(1))
     return (
         cells.select("vec_id", "cluster")
@@ -727,8 +727,7 @@ def embedding_pipeline_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = materialize(
         _cluster_cells(spark, sf_dir).withColumn(
             "nrm", sim.norm(F.col("embedding"))
-        ),
-        eager=True,  # eager: single-action dedupe
+        )
     )
     v2 = v1.filter(F.col("nrm") > 0)
     # shared SemDeDup drop set (same tau, quantizer, and block-

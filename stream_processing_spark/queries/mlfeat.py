@@ -356,8 +356,7 @@ def dedup_sorted_neighborhood_pairs(
     ranked = materialize(
         keyed.select(
             "doc_id", blk.alias("blk"), F.row_number().over(w).alias("rn")
-        ),
-        eager=True,  # eager: single-action dedupe
+        )
     )
     # bounded explode → equi-join on (blk, rn+i): never a range join
     a = ranked.select(
@@ -379,11 +378,10 @@ def dedup_sorted_neighborhood_pairs(
         & (F.col("a_rn") + F.col("rank_distance") == F.col("b_rn")),
     ).select("doc_a", "doc_b", "rank_distance")
 
-    # eager: single-action dedupe; hash64: the verify join and both
-    # size counts use the shingle for EQUALITY only — 16-byte rows
-    # through the distinct, the checkpoint and the join (same 64-bit
-    # collision class as jaccard_pairs)
-    sh = materialize(dd.shingles(docs, n=3, hash64=True), eager=True)
+    # hash64: the verify join and both size counts use the shingle for
+    # EQUALITY only — 16-byte rows through the distinct, the checkpoint
+    # and the join (same 64-bit collision class as jaccard_pairs)
+    sh = materialize(dd.shingles(docs, n=3, hash64=True))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), "sh")
     sb = sh.select(
@@ -487,13 +485,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge frame from the 2 GB base scan (two extra full-input stages
     # at sf1); eager materialization runs each frame exactly once —
     # sf1 36.1 s → 24.9 s same-session, identical results.
-    op = (
+    op = materialize(
         li.select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     a, b = op.alias("a"), op.alias("b")
-    half = (
+    half = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -503,7 +500,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     edges = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -517,12 +513,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(_LPA_ITERS):
         # labels feeds two branches (votes + keep-own fallback):
         # materialize so the round's lineage is computed once. Round 0
-        # is the exception (r14, interleaved A/B in tools/ab_lpa.py —
-        # wins every pair): its winner is the min-neighbor shortcut
-        # that never reads labels, so the identity frame feeds only
-        # ONE branch and a checkpoint there is a pure barrier job.
+        # is the exception (r14, an interleaved A/B won every pair):
+        # its winner is the min-neighbor shortcut that never reads
+        # labels, so the identity frame feeds only ONE branch and a
+        # checkpoint there is a pure barrier job.
         if i:
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
         if i == 0:
             # ROUND-1 SHORTCUT (r11, bit-identical by construction):
             # labels start as the identity, and edges are DISTINCT, so
@@ -846,13 +842,13 @@ def conformal_linreg_intervals(
     # (r13 one-scan rule) — the two lineitem scans left (train stats,
     # test scoring) are the true minimum, the folds are disjoint and
     # the dependency is sequential
-    fitted = stats.select(
+    fitted = materialize(stats.select(
         "n_train",
         slope.alias("slope"),
         ((sy - slope * sx) / F.nullif(n.cast("double"), F.lit(0.0))).alias(
             "intercept"
         ),
-    ).localCheckpoint(eager=True)
+    ))
     cents = (
         base.filter(F.col("fold") == 0)
         .crossJoin(F.broadcast(fitted))
@@ -873,10 +869,9 @@ def conformal_linreg_intervals(
     # EAGER checkpoint: the histogram feeds the scan's branches AND the
     # total broadcast — without it each branch re-runs the fold+scoring
     # corpus scan (VERDICT r12 weak #1; r13 one-scan rule)
-    hist = (
+    hist = materialize(
         cents.groupBy("cc")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     from stream_processing_spark.operators.prefixsum import (
         range_prefix_sum,
@@ -977,7 +972,7 @@ def _ks_from_hist(hist: DataFrame) -> DataFrame:
         range_prefix_sum,
     )
 
-    hist = hist.localCheckpoint(eager=True)
+    hist = materialize(hist)
     tot = hist.agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")
     )
@@ -1162,7 +1157,7 @@ def _psi_from_hist(hist: DataFrame) -> DataFrame:
         range_prefix_sum,
     )
 
-    hist = hist.localCheckpoint(eager=True)
+    hist = materialize(hist)
     wall = Window.partitionBy()
     cum = range_prefix_sum(
         hist.select("cents", "ca"),
@@ -1997,22 +1992,12 @@ def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ streaming KS drift
 
-@register(
-    "streaming_ks_drift_monitor",
-    _KS_ORACLE_SQL,
-    doc="Streaming twin of ks_value_drift_report: the FIRST half of the "
-    "day span is the frozen reference histogram (computed batch-side, "
-    "the way a production monitor freezes its control period), the "
-    "SECOND half is ingested as a REAL file stream whose per-cent-value "
-    "counts aggregate in complete mode (availableNow drain); the merged "
-    "histograms run the identical integer KS maximization, so the final "
-    "state equals the batch answer and the batch oracle certifies the "
-    "streaming path. The stream's state is (cent-value, count) rows — "
-    "bounded by the value DOMAIN, not the event count.",
-)
-def streaming_ks_drift_monitor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
+def _drift_monitor(spark: SparkSession, sf_dir: str, stat) -> DataFrame:
+    """Shared body of the streaming drift monitors: the FIRST half of the
+    event day span is a frozen reference histogram, the SECOND half is
+    drained from a real file stream, and ``stat`` (``_ks_from_hist`` or
+    ``_psi_from_hist``) reduces the merged (cents, ca, cb) histogram to
+    the report."""
     import datetime as _dt
 
     from stream_processing_spark.queries.streaming_queries import (
@@ -2036,50 +2021,71 @@ def streaming_ks_drift_monitor(
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .persist()
     )
-    bounds = day_hist.agg(
-        F.min("d").alias("d0"), F.max("d").alias("d1")
-    ).collect()[0]
-    if bounds["d0"] is None:
-        dmid = None
-    else:
-        dmid = bounds["d0"] + _dt.timedelta(
-            days=(bounds["d1"] - bounds["d0"]).days // 2
+    # the report is materialized before the cache is released, and the
+    # release runs on every exit (a drain timeout included) — each call
+    # used to leak one cached histogram into a long-lived session
+    # (ADVICE r11; the sf1 sweep OOMed an 8g driver on the accumulation)
+    try:
+        bounds = day_hist.agg(
+            F.min("d").alias("d0"), F.max("d").alias("d1")
+        ).collect()[0]
+        if bounds["d0"] is None:
+            dmid = None
+        else:
+            dmid = bounds["d0"] + _dt.timedelta(
+                days=(bounds["d1"] - bounds["d0"]).days // 2
+            )
+        dmid_lit = F.lit(dmid).cast("date")
+        ref = (
+            day_hist.filter(F.col("d") <= dmid_lit)
+            .groupBy("cents")
+            .agg(F.sum("cnt").cast("bigint").alias("ca"))
         )
-    dmid_lit = F.lit(dmid).cast("date")
-    ref = (
-        day_hist.filter(F.col("d") <= dmid_lit)
-        .groupBy("cents")
-        .agg(F.sum("cnt").cast("bigint").alias("ca"))
-    )
-    # the live filter is the EXACT complement of the reference split:
-    # the oracle's CASE sends NULL-ts (non-NULL-value) rows to the
-    # second half, so a plain `> dmid` — which drops them — would
-    # diverge on NULL timestamps (ADVICE r10). NULL dmid (all-NULL ts)
-    # degenerates correctly too: every row is live, none is reference.
-    live = (
-        _events_stream(spark, sf_dir)
-        .filter(
-            F.col("value").isNotNull()
-            & ~F.coalesce(F.to_date("ts") <= dmid_lit, F.lit(False))
+        # the live filter is the EXACT complement of the reference split:
+        # the oracle's CASE sends NULL-ts (non-NULL-value) rows to the
+        # second half, so a plain `> dmid` — which drops them — would
+        # diverge on NULL timestamps (ADVICE r10). NULL dmid (all-NULL
+        # ts) degenerates correctly too: every row is live, none is
+        # reference.
+        live = (
+            _events_stream(spark, sf_dir)
+            .filter(
+                F.col("value").isNotNull()
+                & ~F.coalesce(F.to_date("ts") <= dmid_lit, F.lit(False))
+            )
+            .groupBy(
+                F.floor(F.col("value") * 100).cast("bigint").alias("cents")
+            )
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
         )
-        .groupBy(
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents")
+        drained = _drain_memory(live, spark, "complete")
+        hist = ref.join(drained, "cents", "full_outer").select(
+            "cents",
+            F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
+            F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
         )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
-    )
-    drained = _drain_memory(live, spark, "complete")
-    hist = ref.join(drained, "cents", "full_outer").select(
-        "cents",
-        F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
-        F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
-    )
-    # materialize the (1-row) report eagerly so the control-period cache
-    # can be released before returning — without this every monitor call
-    # leaked one cached histogram into a long-lived session (ADVICE r11;
-    # the sf1 sweep OOMed an 8g driver on the accumulation)
-    out = _ks_from_hist(hist).localCheckpoint(eager=True)
-    day_hist.unpersist()
-    return out
+        return materialize(stat(hist))
+    finally:
+        day_hist.unpersist()
+
+
+@register(
+    "streaming_ks_drift_monitor",
+    _KS_ORACLE_SQL,
+    doc="Streaming twin of ks_value_drift_report: the FIRST half of the "
+    "day span is the frozen reference histogram (computed batch-side, "
+    "the way a production monitor freezes its control period), the "
+    "SECOND half is ingested as a REAL file stream whose per-cent-value "
+    "counts aggregate in complete mode (availableNow drain); the merged "
+    "histograms run the identical integer KS maximization, so the final "
+    "state equals the batch answer and the batch oracle certifies the "
+    "streaming path. The stream's state is (cent-value, count) rows — "
+    "bounded by the value DOMAIN, not the event count.",
+)
+def streaming_ks_drift_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return _drift_monitor(spark, sf_dir, _ks_from_hist)
 
 
 # ---------------------------------------------- Poisson bootstrap CI

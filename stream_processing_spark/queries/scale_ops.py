@@ -16,6 +16,7 @@ from stream_processing_spark.catalog import load_table
 from stream_processing_spark.operators import bloomjoin, zorder
 from stream_processing_spark.queries import register
 from stream_processing_spark.queries._util import REVENUE_SQL, revenue_col
+from stream_processing_spark.runtime import materialize
 
 _BLOOM_PRICE = 300000
 
@@ -263,12 +264,11 @@ def bpe_encode_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge-replay runs over and the cnt-weighted per-source stats —
     # previously the corpus was exploded twice. Integer sums regroup
     # bit-identically (guide §2.3/§2.4).
-    hist = (
+    hist = materialize(
         docs.select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     words = hist.select("w").distinct()
     repr_col = F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 "))
@@ -920,12 +920,11 @@ def wordpiece_encode_source_stats(
     # ONE corpus tokenize pass (same shape as bpe_encode_source_stats):
     # the (source, w) histogram feeds the distinct-word walk AND the
     # cnt-weighted per-source stats; integer sums regroup bit-identically
-    hist = (
+    hist = materialize(
         docs.select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= _WP_MAX_WORD))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     words = hist.select("w").distinct()
     if pieces:

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.functions import dedup as dd
 from stream_processing_spark.functions.dedup import band_buckets  # noqa: F401
+from stream_processing_spark.runtime import materialize
 # band_buckets lives in functions/dedup.py (single source of truth for
 # the band/sig spelling — lsh_candidate_pairs builds its buckets from
 # the same helper, so stream/batch pair parity is by construction)
@@ -341,17 +342,16 @@ class StreamingIngestDedup:
         sh = dd.shingles(
             batch_df.select("doc_id", "text"), n=self.shingle_n
         )
-        sigs = dd.minhash_signatures(sh, k=self.k).localCheckpoint(
-            eager=True
-        )  # bands + persistence + the id registry
+        # feeds the bands, the persistence and the id registry
+        sigs = materialize(dd.minhash_signatures(sh, k=self.k))
         hcols = [f"h{s}" for s in range(self.k)]
         # band rows carry the full signature inline so pair scoring
         # never needs a corpus-wide signature join
-        new_b = self._with_pfx(
+        new_b = materialize(self._with_pfx(
             band_buckets(
                 sigs, bands=self.bands, rows_per_band=self.rows_per_band
             ).join(sigs.select("doc_id", *hcols), "doc_id")
-        ).localCheckpoint(eager=True)  # feeds 4 branches below
+        ))  # feeds 4 branches below
 
         # join-side rows: optionally drop oversized within-batch
         # buckets (see max_bucket); the WRITE below always uses the

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_processing_spark.queries import REGISTRY
+from tests.conftest import SF_SMOKE
 from tests.oracle_util import compare
 
 
@@ -431,3 +432,56 @@ def test_unicode_text_matches_oracle(spark, tmp_path):
         compare(spec.spark(spark, str(tmp_path)), oracle.sql(spec.oracle),
                 f"unicode:{name}")
     oracle.close()
+
+
+def test_minhash_signatures_rejects_bigint_shingles(spark):
+    # md5-seeded min-hash is value-bearing: a hash64 shingle frame would
+    # be cast to decimal text and give silently different signatures
+    from stream_processing_spark.functions import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id bigint, text string"
+    )
+    with pytest.raises(ValueError, match="string shingles"):
+        dd.minhash_signatures(dd.shingles(docs, n=3, hash64=True), k=4)
+    sigs = dd.minhash_signatures(dd.shingles(docs, n=3), k=4)
+    assert sigs.count() == 2
+
+
+@pytest.mark.parametrize("algorithm", ["auto", "star", "propagation"])
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_rejects_nonpositive_max_iter(
+    spark, algorithm, max_iter
+):
+    # every algorithm refuses a zero round budget up front, instead of
+    # auto/propagation answering identity labels and star answering
+    # whatever its seed edges say
+    from stream_processing_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(edges, max_iter=max_iter, algorithm=algorithm)
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_ks_drift_monitor", "streaming_psi_drift_monitor"]
+)
+def test_drift_monitor_releases_cache_when_drain_fails(
+    spark, monkeypatch, name
+):
+    # the control-period histogram is cached before the live stream
+    # drains; a drain timeout must not leave it cached in the session
+    from stream_processing_spark.queries import streaming_queries as sq
+
+    def _timeout(*_a, **_k):
+        raise TimeoutError("drain did not finish")
+
+    monkeypatch.setattr(sq, "_drain_memory", _timeout)
+    # both monitors cache the same plan: start from an empty cache so a
+    # histogram leaked by one cannot hide the other's
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(TimeoutError):
+        REGISTRY[name].spark(spark, SF_SMOKE)
+    assert persistent().size() == before

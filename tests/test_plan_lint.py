@@ -16,14 +16,26 @@ a query into a plan that cannot survive 100 TB:
   operators/prefixsum.range_prefix_sum or a TakeOrderedAndProject
   limit instead (VERDICT r11 weak #1).
 
+The bans apply to the final plan AND to the plan of every frame put
+behind a materialization barrier while the query is built: an eager
+barrier runs its job inside ``spec.spark()``, so the final plan only
+shows a scan of the stored copy.
+
 Streaming queries are exempt (they execute on .start(), not lazily, and
 their plans are asserted in their own tests).
+
+A source lint keeps ``runtime.materialize`` the only barrier: no other
+code in the package calls ``localCheckpoint`` or ``checkpoint``.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 
+import stream_processing_spark
 from stream_processing_spark.queries import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -61,6 +73,8 @@ CROSS_OK = {
     "mixture_dsir_weights",       # 1-row (raw_total, target_total) broadcast
     "mixture_dsir_resample",      # same 1-row totals broadcast, inherited
     "unigram_lm_train",           # 1-row normalizer-total broadcast per EM round
+    "unigram_encode_source_stats",  # the same 1-row EM normalizer
+                                    # total, in its barrier plans
     "embedding_power_iteration_pc1",  # 1-row norm scalar broadcast per iteration
     "changepoint_cusum_daily_events",  # 1-row (mu, sigma) stats broadcast
     "retrieval_mmr_rerank_topk",   # 1-row query vector broadcast; all
@@ -189,25 +203,81 @@ def _nonpartitioned_windows(plan: str) -> list[str]:
     return hits
 
 
-@pytest.mark.parametrize(
-    "name", [n for n in sorted(REGISTRY) if n not in _SKIP]
-)
-def test_plan_is_scale_safe(spark, name):
-    df = REGISTRY[name].spark(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture
+def barrier_plans(monkeypatch):
+    """Physical plan of every frame that reaches a barrier while the
+    fixture is active, recorded before the barrier runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
+    plans: list[str] = []
+
+    def _spy(barrier):
+        def recorded(self, *args, **kwargs):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return barrier(self, *args, **kwargs)
+
+        return recorded
+
+    for meth in ("localCheckpoint", "checkpoint"):
+        monkeypatch.setattr(DataFrame, meth, _spy(getattr(DataFrame, meth)))
+    return plans
+
+
+def _assert_scale_safe(name: str, plan: str, where: str) -> None:
     if name not in CROSS_OK:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan  # no row-at-a-time UDFs
+        assert "BroadcastNestedLoopJoin" not in plan, f"{where}:\n{plan}"
+        assert "CartesianProduct" not in plan, f"{where}:\n{plan}"
+    # no row-at-a-time UDFs
+    assert "BatchEvalPython" not in plan, f"{where}:\n{plan}"
     if name not in WINDOW_OK:
         hits = _nonpartitioned_windows(plan)
         assert not hits, (
             f"{name}: non-partitioned window(s) over an undocumented "
             f"frame {hits} — use operators/prefixsum.range_prefix_sum "
             "for data-sized cumulatives, orderBy().limit() for top-k, "
-            "or add a WINDOW_OK entry with the domain bound:\n" + plan
+            f"or add a WINDOW_OK entry with the domain bound ({where}):\n"
+            + plan
         )
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in sorted(REGISTRY) if n not in _SKIP]
+)
+def test_plan_is_scale_safe(spark, barrier_plans, name):
+    df = REGISTRY[name].spark(spark, SF)
+    for i, plan in enumerate(barrier_plans):
+        _assert_scale_safe(name, plan, f"barrier {i + 1} of {name}")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    _assert_scale_safe(name, plan, f"final plan of {name}")
+
+
+def test_barriers_go_through_materialize():
+    # one spelling for the materialization barrier: how a frame is
+    # stored (local or reliable, eager or lazy) is decided in one place
+    root = pathlib.Path(stream_processing_spark.__file__).parent
+    direct = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        todo = [ast.parse(path.read_text(), rel)]
+        while todo:
+            node = todo.pop()
+            if (
+                rel == "runtime.py"
+                and isinstance(node, ast.FunctionDef)
+                and node.name == "materialize"
+            ):
+                continue
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                direct.append((rel, node.lineno))
+            todo.extend(ast.iter_child_nodes(node))
+    assert not direct, (
+        "call runtime.materialize instead of localCheckpoint/checkpoint: "
+        + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
+    )
 
 
 # ---------------------------------------------------------------------

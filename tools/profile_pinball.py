@@ -22,6 +22,7 @@ def main() -> int:
 
     from stream_processing_spark.catalog import load_table
     from stream_processing_spark.queries.expstats3 import _QR_GRID
+    from stream_processing_spark.runtime import materialize
     from stream_processing_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,7 +38,7 @@ def main() -> int:
             & F.col("l_extendedprice").isNotNull()
         )
         t0 = time.perf_counter()
-        hist0 = (
+        hist0 = materialize(
             li.select(
                 F.col("l_quantity").cast("double").alias("xq"),
                 (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
@@ -46,7 +47,6 @@ def main() -> int:
             )
             .groupBy("xq", "yc")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .localCheckpoint(eager=True)
         )
         t1 = time.perf_counter()
         xd = F.col("xq").cast("decimal(12,2)")
@@ -70,14 +70,14 @@ def main() -> int:
             .alias("sxx"),
         )
         n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-        fit = st.select(
+        fit = materialize(st.select(
             "n",
             F.round(
                 (n * F.col("sxy") - sx * sy)
                 / F.nullif(n * F.col("sxx") - sx * sx, F.lit(0.0)),
                 6,
             ).alias("rs"),
-        ).localCheckpoint(eager=True)
+        ))
         t2 = time.perf_counter()
         cand = (
             fit.filter(F.col("rs").isNotNull())
