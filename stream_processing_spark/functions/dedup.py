@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stream_processing_spark.functions.keys import eq_key, value_hash
 from stream_processing_spark.runtime import materialize, rebalance_for_expansion
 
 
@@ -59,7 +60,7 @@ def shingles(
     consumers (MinHash) pass distinct=False: MIN is duplicate-insensitive
     and the dedup would cost a full extra shuffle for nothing.
 
-    hash64=True replaces the shingle string with xxhash64(sh) BEFORE
+    hash64=True replaces the shingle string with eq_key(sh) BEFORE
     the distinct, so the set-semantics shuffle carries fixed 16-byte
     rows instead of ~n-word strings (guide §2.3) — the string dies
     map-side in the same stage that built it. Only for consumers that
@@ -91,7 +92,7 @@ def shingles(
         )
     )
     if hash64:
-        out = out.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
+        out = out.select(F.col(id_col), eq_key("sh").alias("sh"))
     return out.distinct() if distinct else out
 
 
@@ -116,50 +117,37 @@ def cap_document_frequency(
     )
 
 
-def jaccard_pairs(
-    sh: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard over a shingle frame: pairs with J >= threshold.
-
-    Plan: shuffle on the shingle (the only all-to-all step), count common
-    shingles per pair, join per-doc sizes back, filter. Integer-only
-    arithmetic until one exact double division → engine-portable values.
-
-    ``max_df`` is the scale guard: a shingle appearing in d documents
-    contributes d² rows to the self-join, so one stop-shingle in a
-    million docs is 10¹² pair-rows — while carrying ~zero Jaccard signal
-    (near-dup pairs are identified by their RARE shingles). Dropping
-    shingles with document frequency > max_df bounds every join key's
-    contribution to max_df² rows, making total join size linear in the
-    number of distinct shingles instead of quadratic in corpus size.
-    The df filter is a window count over the same shingle partitioning
-    the join shuffles on — no extra exchange. Jaccard is then computed
-    over the CAPPED shingle sets (sizes and intersections from the same
-    filtered vocabulary, so J stays a true Jaccard of well-defined sets).
-    """
-    # Everything downstream uses the shingle ONLY for equality (the
-    # df-cap window, the self-join key) and counting — never its value —
-    # so replace the ~n-word shingle STRING with its 64-bit xxhash64
-    # BEFORE any shuffle or materialization (guide §2.3 "shuffle keys
-    # and metadata instead of payloads"; r13 verdict: bound what is
-    # materialized to ids + shingle hashes). This cuts the window
-    # exchange, the checkpoint and both join sides to fixed 16-byte
-    # rows. Results are identical up to a 64-bit hash collision between
-    # two distinct shingles that share a doc or a joined pair
-    # (P ≈ n²/2⁶⁵ — ~10⁻⁸ at sf0.1; the gate verifies bit-equality at
-    # all test SFs). Skipped when the caller already passed hashed
-    # shingles (shingles(hash64=True) — hashing BEFORE the distinct
-    # also shrinks the set-semantics shuffle itself).
-    if dict(sh.dtypes).get("sh") != "bigint":
-        sh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
+def _pair_overlap(
+    sh: DataFrame, id_col: str, max_df: int | None, reliable: bool,
+    checkpoint_dir: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared core of jaccard_pairs and containment_pairs: per-doc sizes
+    ``(id_col, n_sh)`` and per-pair intersections ``(doc_a, doc_b,
+    n_common)``, doc_a < doc_b. ``sh`` holds string shingles or the
+    bigint output of ``shingles(hash64=True)``; other types raise."""
+    # Everything here uses the shingle ONLY for equality (the df-cap
+    # window, the self-join key) and counting — never its value — so a
+    # string shingle becomes its 64-bit eq_key BEFORE any shuffle or
+    # materialization (guide §2.3 "shuffle keys and metadata instead of
+    # payloads"; r13 verdict: bound what is materialized to ids +
+    # shingle hashes). This cuts the window exchange, the checkpoint and
+    # both join sides to fixed 16-byte rows. Results are identical up to
+    # a 64-bit hash collision between two distinct shingles that share a
+    # doc or a joined pair (P ≈ n²/2⁶⁵ — ~10⁻⁸ at sf0.1; the gate
+    # verifies bit-equality at all test SFs). A bigint sh is already
+    # hashed (shingles(hash64=True) — hashing BEFORE the distinct also
+    # shrinks the set-semantics shuffle itself).
+    sh_type = dict(sh.dtypes).get("sh")
+    if sh_type == "string":
+        sh = sh.select(F.col(id_col), eq_key("sh").alias("sh"))
+    elif sh_type != "bigint":
+        raise ValueError(
+            f"sh must be string shingles or bigint shingle hashes "
+            f"(shingles(..., hash64=True)), got {sh_type}"
+        )
     if max_df is not None:
         sh = cap_document_frequency(sh, max_df)
-    # the shingle frame feeds FOUR plan branches (join sides a/b + both
+    # the shingle frame feeds FOUR plan branches (join sides a/b + the
     # size lookups); without materialization Spark recomputes the whole
     # explode+distinct+df-cap pipeline per branch. One checkpoint = one
     # computation; reliable=True writes it to the context checkpoint dir
@@ -174,6 +162,37 @@ def jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+    return sizes, common
+
+
+def jaccard_pairs(
+    sh: DataFrame,
+    threshold: float,
+    id_col: str = "doc_id",
+    max_df: int | None = None,
+    reliable: bool = False,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard over a shingle frame: pairs with J >= threshold.
+
+    Plan: shuffle on the shingle (the only all-to-all step), count common
+    shingles per pair, join per-doc sizes back, filter. Integer-only
+    arithmetic until one exact double division → engine-portable values.
+    ``sh`` holds string shingles or ``shingles(hash64=True)`` hashes.
+
+    ``max_df`` is the scale guard: a shingle appearing in d documents
+    contributes d² rows to the self-join, so one stop-shingle in a
+    million docs is 10¹² pair-rows — while carrying ~zero Jaccard signal
+    (near-dup pairs are identified by their RARE shingles). Dropping
+    shingles with document frequency > max_df bounds every join key's
+    contribution to max_df² rows, making total join size linear in the
+    number of distinct shingles instead of quadratic in corpus size.
+    The df filter is a window count over the same shingle partitioning
+    the join shuffles on — no extra exchange. Jaccard is then computed
+    over the CAPPED shingle sets (sizes and intersections from the same
+    filtered vocabulary, so J stays a true Jaccard of well-defined sets).
+    """
+    sizes, common = _pair_overlap(sh, id_col, max_df, reliable, checkpoint_dir)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
@@ -203,34 +222,17 @@ def containment_pairs(
     C ≥ threshold and |A| ≥ min_shingles (tiny shingle sets are
     trivially contained — the floor keeps the signal meaningful).
 
-    Plan shape and scale guards are jaccard_pairs': one shuffle on the
-    shingle, ``max_df`` bounds every join key to max_df² rows, sizes
-    joined back, one exact double division. The intersection is
-    computed ONCE per unordered pair and emitted in both orientations
-    — no second self-join.
+    Plan shape, accepted ``sh`` types and scale guards are
+    jaccard_pairs' (``_pair_overlap``). The intersection is computed
+    ONCE per unordered pair and emitted in both orientations — no
+    second self-join.
 
     Rounding: the threshold applies to the UNROUNDED containment; the
     emitted ``containment`` column is rounded to 6dp for display and
     hash-stability, so a row can display a value that rounds just
     below the threshold (e.g. true C = threshold + 1e-8). The DuckDB
     oracle mirrors filter-then-round exactly."""
-    # ids + 64-bit shingle hashes only — same §2.3/§5 size bound (and
-    # the same collision caveat / prehashed-caller skip) as
-    # jaccard_pairs above
-    if dict(sh.dtypes).get("sh") != "bigint":
-        sh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    if max_df is not None:
-        sh = cap_document_frequency(sh, max_df)
-    sh = materialize(sh, reliable=reliable, checkpoint_dir=checkpoint_dir)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "sh")
-    b = sh.select(F.col(id_col).alias("doc_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    sizes, common = _pair_overlap(sh, id_col, max_df, reliable, checkpoint_dir)
     both = common.unionByName(
         common.select(
             F.col("doc_b").alias("doc_a"),
@@ -332,11 +334,18 @@ def lsh_candidate_pairs(
     )
     # the 32-hex band sig is used for EQUALITY only from here on (the
     # bucket-size window and the self-join key; candidate pairs emit
-    # ids alone) — carry its xxhash64 through the shuffles instead
+    # ids alone) — carry its eq_key through the shuffles instead
     # (guide §2.3; same 64-bit collision class as the shingle hashing,
     # scoped per band). band_buckets itself keeps the md5 string: it
-    # is the shared stream/batch bucket spelling.
-    buckets = buckets.select(id_col, "band", F.xxhash64("sig").alias("sig"))
+    # is the shared stream/batch bucket spelling. With max_bucket set a
+    # collision can also LOSE recall, not only add false candidates:
+    # two distinct sigs of one band that share an eq_key are counted as
+    # one bucket, which can push a real bucket over the cap and drop it.
+    # With at most N distinct sigs per band that needs a collision, so
+    # P ≤ bands·N²/2⁶⁵ over the whole call (with the default 4 bands
+    # ~10⁻¹¹ at N = 10⁴ docs, ~10⁻⁷ at 10⁶), and a near-dup pair is
+    # lost only if no other band of theirs shares a surviving bucket.
+    buckets = buckets.select(id_col, "band", eq_key("sig").alias("sig"))
     if max_bucket is not None:
         from pyspark.sql.window import Window
 
@@ -363,18 +372,12 @@ def _simhash(
     """Shared SimHash body: sign-of-bit-sums over the first n_bits/4 md5
     hex digits of each whitespace token (with multiplicity).
 
-    The token hash is parsed in ONE ``conv(hex, 16, 10)`` → LONG cast
-    per token instead of n_bits/4 per-digit instr(substring(...))
-    extractions (r14: ~2 string ops per token instead of ~2·digits;
-    a fingerprint-only interleaved A/B won 4 of 5 pairs and the
-    per-token CPU argument is unconditional). Bit b of that long
-    IS the old digit-decomposed bit b: digit d holds value
-    (v >> 4·(digits−1−d)) & 15, so the old (d_{digits−1−b//4} >> b%4)
-    & 1 ≡ (v >> b) & 1. The old ±1 CASE sums become plain bit sums
-    plus one token count: sign(Σ±1) > 0 ⟺ 2·Σbit > n, exactly
-    (Σ±1 = 2·Σbit − n). Fingerprints are bit-identical; the DuckDB
-    twins keep the per-digit spelling (md5 is value-bearing — the
-    oracle mirrors it digit by digit).
+    Each token hash is one ``value_hash`` long v. The DuckDB twins
+    decode the same digits one by one: digit d holds
+    (v >> 4·(digits−1−d)) & 15, so their (d_{digits−1−b//4} >> b%4) & 1
+    ≡ (v >> b) & 1, and their ±1 CASE sums are plain bit sums plus one
+    token count: sign(Σ±1) > 0 ⟺ 2·Σbit > n, exactly (Σ±1 = 2·Σbit − n).
+    Fingerprints are bit-identical.
     """
     n_digits = n_bits // 4
     # rebalance before the expanding explode (see shingles())
@@ -383,9 +386,7 @@ def _simhash(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).select(
         id_col,
-        F.conv(F.substring(F.md5(F.col("tok")), 1, n_digits), 16, 10)
-        .cast("long")
-        .alias("v"),
+        value_hash("tok", n_digits).alias("v"),
     )
     bit_sums = [
         F.sum(F.shiftright(F.col("v"), b).bitwiseAND(F.lit(1))).alias(f"s{b}")
@@ -411,8 +412,8 @@ def simhash32(
     fingerprint is the sign of sum(±1) of that bit across tokens.
 
     Everything is integer arithmetic — portable across engines (the
-    value never exceeds 32 bits; see ``_simhash`` for the one-conv
-    parse that replaced per-digit extraction).
+    value never exceeds 32 bits; see ``_simhash`` for why it matches
+    the per-digit DuckDB twins).
     """
     return _simhash(df, 32, id_col, text_col)
 

@@ -47,17 +47,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stream_processing_spark.functions.keys import eq_key
 from stream_processing_spark.runtime import materialize
 
 _WORD = 64
 
 
 def _bit_positions(key: Column, m_bits: int, k_hashes: int) -> list[Column]:
-    """k deterministic bit positions for a key: native xxhash64 with a
+    """k deterministic bit positions for a key: native eq_key with a
     literal seed column per hash (hashing the pair (i, key) gives k
     independent streams), reduced mod m_bits."""
     return [
-        F.pmod(F.xxhash64(F.lit(i), key), F.lit(m_bits)).cast("long")
+        F.pmod(eq_key(F.lit(i), key), F.lit(m_bits)).cast("long")
         for i in range(k_hashes)
     ]
 

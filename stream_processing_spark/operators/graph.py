@@ -81,6 +81,8 @@ def connected_components(
     ``star`` (O(log n) rounds), ``propagation`` (O(diameter) rounds).
     ``stats``, if given, receives ``{"rounds": k}`` (total driver
     rounds across phases) for convergence assertions in tests.
+    Raises ``RuntimeError`` if the labels have not converged within
+    ``max_iter`` rounds.
     """
     if algorithm not in ("auto", "star", "propagation"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -92,7 +94,7 @@ def connected_components(
 
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if algorithm == "star":
-        return _star_cc(fwd, _cut, max_iter, stats)
+        return _finish(algorithm, *_star_cc(fwd, _cut, max_iter), stats)
 
     sym = _cut(
         fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
@@ -143,11 +145,9 @@ def connected_components(
             .select(F.col("la").alias("a"), F.col("lb").alias("b"))
             .distinct()
         )
-        star_stats: dict = {}
-        reps = _star_cc(
-            contracted, _cut, max_iter - rounds, star_stats
-        ).withColumnRenamed("node", "rep")
-        rounds += star_stats["rounds"]
+        reps, more, converged = _star_cc(contracted, _cut, max_iter - rounds)
+        reps = reps.withColumnRenamed("node", "rep")
+        rounds += more
         labels = labels.join(
             reps, labels.label == reps.rep, "left"
         ).select(
@@ -155,9 +155,19 @@ def connected_components(
             F.coalesce("component", "label").alias("label"),
         )
 
+    out = labels.select("node", F.col("label").alias("component"))
+    return _finish(algorithm, out, rounds, converged, stats)
+
+
+def _finish(algorithm, out, rounds, converged, stats):
+    if not converged:
+        raise RuntimeError(
+            f"connected_components(algorithm={algorithm!r}) did not "
+            f"converge in {rounds} rounds; raise max_iter"
+        )
     if stats is not None:
         stats["rounds"] = rounds
-    return labels.select("node", F.col("label").alias("component"))
+    return out
 
 
 def _propagate(sym, labels, _cut, max_rounds):
@@ -223,8 +233,9 @@ def _small_star(e: DataFrame) -> DataFrame:
     return nbrs.union(mins.select("u", F.col("m").alias("v"))).distinct()
 
 
-def _star_cc(fwd, _cut, max_iter, stats):
-    """Alternating large-star/small-star; fwd = (a, b) undirected."""
+def _star_cc(fwd, _cut, max_iter):
+    """Alternating large-star/small-star; fwd = (a, b) undirected.
+    Returns (components, rounds, converged)."""
     # seed: directed child>parent edges; drop self-loops
     e = _cut(
         fwd.filter(F.col("a") != F.col("b"))
@@ -239,6 +250,7 @@ def _star_cc(fwd, _cut, max_iter, stats):
         .distinct()
     )
     rounds = 0
+    converged = False
     for _ in range(max_iter):
         rounds += 1
         e2 = _cut(_small_star(_large_star(e)))
@@ -248,11 +260,9 @@ def _star_cc(fwd, _cut, max_iter, stats):
         if e2.count() == e.count() and (
             e2.subtract(e).limit(1).count() == 0
         ):
-            e = e2
+            e, converged = e2, True
             break
         e = e2
-    if stats is not None:
-        stats["rounds"] = rounds
     # e is now disjoint stars (child, center); centers are component
     # minima. Nodes absent as a child are centers (or singletons after
     # self-loop removal) → component = self.
@@ -261,4 +271,4 @@ def _star_cc(fwd, _cut, max_iter, stats):
         nodes.join(e.select(F.col("u").alias("node")), "node", "left_anti")
         .select("node", F.col("node").alias("component"))
     )
-    return children.union(selfs)
+    return children.union(selfs), rounds, converged

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import value_hash
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
 
@@ -723,13 +724,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_weighted_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("n_chars").alias("m"))
-    u = (
-        F.expr(
-            "CAST(conv(substring(md5(CAST(text AS BINARY)), 1, 8), 16, 10) "
-            "AS BIGINT)"
-        )
-        / F.lit(4294967296.0)
-    )
+    u = value_hash(F.col("text").cast("binary"), 8) / F.lit(4294967296.0)
     return (
         docs.crossJoin(F.broadcast(mx))
         .filter(u < F.col("n_chars").cast("double") / F.col("m").cast("double"))

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import eq_key
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
 
@@ -82,13 +83,13 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "split",
             # r14: the n-gram key is equality-only (train-set member-
             # ship + count; never output — the oracle hashes its own
-            # side), so xxhash64 replaces md5: cheaper per-token map
+            # side), so eq_key replaces md5: cheaper per-token map
             # and 8-byte keys through the distinct, checkpoint and
             # join (interleaved A/B: wins every pair, min 2.32 → 1.84
             # s; same collision class as the shingle hashing, gate-
             # verified ×3 SF). The SPLIT rule's md5(text) is value-
             # bearing (mirrored by the oracle) and stays md5.
-            F.xxhash64(
+            eq_key(
                 F.concat_ws(" ", *[f"__z.{j}" for j in range(n)])
             ).alias("g"),
         )
@@ -822,8 +823,8 @@ def _doc_avg_bigram_p(docs: DataFrame) -> DataFrame:
         .select("doc_id", F.explode(zipped).alias("__z"))
         .select(
             "doc_id",
-            F.xxhash64(F.concat_ws(" ", "__z.0", "__z.1")).alias("bgh"),
-            F.xxhash64("__z.0").alias("w1h"),
+            eq_key(F.concat_ws(" ", "__z.0", "__z.1")).alias("bgh"),
+            eq_key("__z.0").alias("w1h"),
         )
     )
     counted = db.groupBy("bgh", "w1h").agg(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.functions import similarity as sim
+from stream_processing_spark.functions.keys import eq_key, value_hash
 from stream_processing_spark.queries import register
 from stream_processing_spark.queries._util import dec
 from stream_processing_spark.runtime import materialize
@@ -386,9 +387,11 @@ def cross_source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {_XS_SPAN_W}), "
-                    f"i -> xxhash64(concat_ws(' ', slice(t, i + 1, {_XS_SPAN_W}))))"
+                F.transform(
+                    F.sequence(F.lit(0), F.size("t") - _XS_SPAN_W),
+                    lambda i: eq_key(
+                        F.concat_ws(" ", F.slice("t", i + 1, _XS_SPAN_W))
+                    ),
                 )
             ).alias("fp"),
         )
@@ -640,10 +643,14 @@ _HEX_DIGITS = "0123456789abcdef"
 )
 def epoch_shuffle_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shard = F.expr(
-        "locate(substr(md5(concat(cast(epoch as string), ':', "
-        f"cast(doc_id as string))), 1, 1), '{_HEX_DIGITS}') - 1"
-    )
+    shard = value_hash(
+        F.concat(
+            F.col("epoch").cast("string"),
+            F.lit(":"),
+            F.col("doc_id").cast("string"),
+        ),
+        1,
+    ).cast("int")
     return (
         docs.select(
             "doc_id",

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import eq_key, value_hash
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
 
@@ -131,7 +132,7 @@ def exact_substring_spans(docs: DataFrame, k: int = _ESS_K) -> DataFrame:
     # spread a small scan's rows across cores first. r14 (guide §2.3,
     # §5; interleaved A/B): the fingerprint is
     # EQUALITY-ONLY (hot-set count + join-back; the outputs are counts
-    # and positions), so xxhash64 replaces md5 — same results up to
+    # and positions), so eq_key replaces md5 — same results up to
     # the standard 64-bit collision class (gate-verified bit-equal at
     # all test SFs), ~½ the per-token hash cost, and 8-byte keys
     # instead of 32-hex strings through both shuffles. With the cheap
@@ -140,10 +141,13 @@ def exact_substring_spans(docs: DataFrame, k: int = _ESS_K) -> DataFrame:
     # A/B: md5+ckpt [2.02,1.63,1.80] vs xxhash-2pass [1.49,1.32,1.14])
     # — and the §5 executor-storage pin is gone with it.
     docs = rebalance_for_expansion(docs)
-    wins_arr = F.expr(
-        f"transform(sequence(1, size(t) - {k - 1}), "
-        f"i -> struct(i AS s, i + {k - 1} AS e, "
-        f"xxhash64(concat_ws(' ', slice(t, i, {k}))) AS fp))"
+    wins_arr = F.transform(
+        F.sequence(F.lit(1), F.size("t") - (k - 1)),
+        lambda i: F.struct(
+            i.alias("s"),
+            (i + (k - 1)).alias("e"),
+            eq_key(F.concat_ws(" ", F.slice("t", i, k))).alias("fp"),
+        ),
     )
     wins = (
         docs.select("doc_id", F.split("text", " ").alias("t"))
@@ -211,7 +215,7 @@ _DSIR_TARGET_LANG = "en"
 
 # one row per feature OCCURRENCE: unigrams + bigrams of whitespace
 # tokens, hashed to a bucket via the shared md5-prefix integer idiom
-# (Spark conv(hex) == DuckDB CAST('0x'||hex), same integer).
+# (keys.value_hash == DuckDB CAST('0x'||hex), same integer).
 _DSIR_FEATS_SQL = f"""
     feats AS (
         SELECT doc_id, lang,
@@ -330,13 +334,7 @@ def _dsir_features(docs: DataFrame) -> DataFrame:
         "lang",
         F.explode(F.concat(F.col("tf"), bi_arr)).alias("g"),
     )
-    bucket = F.pmod(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(g AS BINARY)), 1, 8), 16, 10) "
-            "AS BIGINT)"
-        ),
-        F.lit(_DSIR_B),
-    )
+    bucket = F.pmod(value_hash(F.col("g").cast("binary"), 8), F.lit(_DSIR_B))
     return grams.select("doc_id", "lang", bucket.alias("bucket"))
 
 
@@ -700,13 +698,7 @@ def _clf_features(docs: DataFrame) -> DataFrame:
     grams = base.select(
         "doc_id", "y", F.explode(F.concat(F.col("tf"), bi_arr)).alias("g")
     )
-    bucket = F.pmod(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(g AS BINARY)), 1, 8), 16, 10) "
-            "AS BIGINT)"
-        ),
-        F.lit(_CLF_B),
-    )
+    bucket = F.pmod(value_hash(F.col("g").cast("binary"), 8), F.lit(_CLF_B))
     return grams.select("doc_id", "y", bucket.alias("bucket"))
 
 
@@ -1349,13 +1341,8 @@ def mixture_temperature_resample(
             ).alias("weight"),
         )
     )
-    # first 8 md5 digits as a 32-bit uniform, parsed in ONE
-    # conv(hex, 16, 10) instead of 8 per-digit extractions (identical
-    # base-16 positional value; same r14 swap as text_rolling_
-    # fingerprint / simhash — md5 stays, the oracle mirrors it)
-    h8 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    # first 8 md5 digits as a 32-bit uniform (the oracle mirrors it)
+    h8 = value_hash(F.col("doc_id").cast("string"), 8)
     copies = F.floor("weight").cast("bigint") + F.when(
         h8
         < F.floor(

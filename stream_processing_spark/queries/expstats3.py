@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import value_hash
 from stream_processing_spark.operators.sessionize import with_sessions
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
@@ -648,11 +649,7 @@ def hllpp_sparse_distinct_users(
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
     )
-    v48 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    v48 = value_hash(F.col("user_id").cast("string"), 12)
     # division by 2^23 is an exact binary-exponent shift, so the
     # floor equals DuckDB's integer // on every 48-bit value
     idx = ev.select(
@@ -933,11 +930,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
     )
-    v48 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    v48 = value_hash(F.col("user_id").cast("string"), 12)
     topk = (
         du.select(v48.alias("v"))
         .distinct()
@@ -1009,11 +1002,7 @@ def weighted_sample_docs_aes(
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("n_chars").isNotNull() & (F.col("n_chars") > 0)
     )
-    v48 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    v48 = value_hash(F.col("doc_id").cast("string"), 12)
     key = F.round(
         F.log(
             F.greatest(v48, F.lit(1)).cast("double")
@@ -1546,11 +1535,7 @@ def split_assignment_report(
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     u = F.floor(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12),
-            16,
-            10,
-        ).cast("bigint")
+        value_hash(F.col("doc_id").cast("string"), 12)
         * 100
         / F.lit(_KMV_2P48)
     )

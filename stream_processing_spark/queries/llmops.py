@@ -16,6 +16,7 @@ from stream_processing_spark.catalog import load_table
 from stream_processing_spark.functions import dedup as dd
 from stream_processing_spark.functions import similarity as sim
 from stream_processing_spark.functions import text as tx
+from stream_processing_spark.functions.keys import value_hash
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
 
@@ -870,17 +871,10 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     win_starts = F.sequence(F.lit(0), F.size(t) - _RH_WIN)
 
     def tok16(tok_col):
-        # ONE conv(hex, 16, 10) parse of the first 4 md5 digits instead
-        # of 4 per-digit instr(substring(...)) extractions — the same
-        # value by construction (base-16 positional sum), ~8 fewer
-        # string ops per token-window (r14 interleaved A/B: old
-        # [3.15,3.26,4.14,3.60] vs conv [2.35,2.15,2.20,2.39], wins
-        # every pair; a transform()-hash-once variant measured 4x WORSE
-        # — interpreted lambda per element). md5 itself stays: the
-        # DuckDB twin mirrors it digit by digit (value-bearing).
-        return F.conv(
-            F.substring(F.md5(tok_col.cast("binary")), 1, 4), 16, 10
-        ).cast("bigint")
+        # first 4 md5 digits; the DuckDB twin mirrors them digit by
+        # digit. Hashing each token once via transform() measured 4x
+        # WORSE (an interpreted lambda per element).
+        return value_hash(tok_col.cast("binary"), 4)
 
     rh = None
     for j in range(_RH_WIN):

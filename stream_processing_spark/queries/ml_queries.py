@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import eq_key, value_hash
 from stream_processing_spark.queries import register
 
 # quantity is 2dp <= ~50, price 2dp <= ~1e5: products fit DECIMAL(24,4);
@@ -329,7 +330,7 @@ def grouped_wavg_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # #1 documents the assumption the 'bit-identical' claim rides on)
     pc = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     qc = F.round(F.col("l_quantity") * 100).cast("bigint")
-    salt = F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(salt_n))
+    salt = F.pmod(eq_key("l_orderkey", "l_linenumber"), F.lit(salt_n))
     partials = li.groupBy("l_linestatus", salt.alias("__salt")).agg(
         F.sum(pc * qc).cast("decimal(38,0)").alias("num_cents4"),
         F.sum(qc).cast("decimal(38,0)").alias("den_cents2"),
@@ -369,13 +370,7 @@ def grouped_wavg_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    fold = (
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)"
-            " AS BIGINT)"
-        )
-        % 5
-    ).cast("int")
+    fold = (value_hash(F.col("user_id").cast("string"), 8) % 5).cast("int")
     folds = ev.select("user_id").distinct().select(
         "user_id", fold.alias("fold")
     )
@@ -524,14 +519,14 @@ def _semantic_drop_ids(cells: DataFrame, blocks: int = 8) -> DataFrame:
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("ea"),
         sim.norm(F.col("embedding")).alias("na"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int").alias("ba"),
+        F.pmod(eq_key("vec_id"), F.lit(B)).cast("int").alias("ba"),
     ).withColumn("tb", F.explode(F.sequence(F.col("ba"), F.lit(B - 1))))
     b = cells.select(
         "cluster",
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("eb"),
         sim.norm(F.col("embedding")).alias("nb"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int").alias("tb"),
+        F.pmod(eq_key("vec_id"), F.lit(B)).cast("int").alias("tb"),
     )
     cos = sim.dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     pairs = (

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.functions import dedup as dd
+from stream_processing_spark.functions.keys import value_hash
 from stream_processing_spark.queries import register
 from stream_processing_spark.runtime import materialize
 
@@ -2167,21 +2168,14 @@ def _boot_w_sql(u: str) -> str:
 )
 def bootstrap_mean_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    un = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("o_orderkey").cast("string"),
-                    F.lit(":"),
-                    F.col("b").cast("string"),
-                )
-            ),
-            1,
-            12,
+    un = value_hash(
+        F.concat(
+            F.col("o_orderkey").cast("string"),
+            F.lit(":"),
+            F.col("b").cast("string"),
         ),
-        16,
-        10,
-    ).cast("bigint") / F.lit(281474976710656.0)
+        12,
+    ) / F.lit(281474976710656.0)
     w = None
     for k, t in enumerate(_BOOT_CUM):
         cond = un < F.lit(t)
@@ -2311,9 +2305,7 @@ def hll_manual_distinct_users(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    v = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10
-    ).cast("bigint")
+    v = value_hash(F.col("user_id").cast("string"), 12)
     hashed = ev.filter(F.col("user_id").isNotNull()).select(v.alias("v"))
     wlow = F.col("v") % _HLL_WMOD
     rho = hashed.select(
@@ -2442,19 +2434,7 @@ def cms_token_frequency_report(
 
     def pos(r_col, tok_col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            r_col.cast("string"), F.lit(":"), tok_col
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            value_hash(F.concat(r_col.cast("string"), F.lit(":"), tok_col), 8)
             % _CMS_W
         )
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_spark.catalog import load_table
+from stream_processing_spark.functions.keys import value_hash
 from stream_processing_spark.operators import bloomjoin, zorder
 from stream_processing_spark.queries import register
 from stream_processing_spark.queries._util import REVENUE_SQL, revenue_col
@@ -584,11 +585,7 @@ def dataset_content_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("date"),
         F.col("o_orderpriority"),
     )
-    term = (
-        F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10)
-        .cast("bigint")
-        .cast("decimal(38,0)")
-    )
+    term = value_hash(row_str, 15).cast("decimal(38,0)")
     return orders.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(term).cast("string").alias("digest"),

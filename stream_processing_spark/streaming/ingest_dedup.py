@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.functions import dedup as dd
 from stream_processing_spark.functions.dedup import band_buckets  # noqa: F401
+from stream_processing_spark.functions.keys import eq_key
 from stream_processing_spark.runtime import materialize
 # band_buckets lives in functions/dedup.py (single source of truth for
 # the band/sig spelling — lsh_candidate_pairs builds its buckets from
@@ -226,7 +227,7 @@ class StreamingIngestDedup:
         """Deterministic hash-prefix bucket of the band signature —
         the inner partition key the corpus scan prunes on."""
         return banded.withColumn(
-            "pfx", F.pmod(F.xxhash64("sig"), F.lit(self.sig_prefix_buckets))
+            "pfx", F.pmod(eq_key("sig"), F.lit(self.sig_prefix_buckets))
         )
 
     def _cell_filter_sql(self, cells: list[tuple[int, int]]) -> str:
@@ -301,7 +302,7 @@ class StreamingIngestDedup:
         join prunes on (band, pfx)."""
         return sigs.withColumn(
             "dpfx",
-            F.pmod(F.xxhash64("doc_id"), F.lit(self.id_buckets)),
+            F.pmod(eq_key("doc_id"), F.lit(self.id_buckets)),
         )
 
     def _read_sigs_before(

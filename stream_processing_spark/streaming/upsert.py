@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stream_processing_spark.functions.keys import eq_key
+
 
 class UpsertTable:
     """A keyed table materialized as bucketed parquet leaves shared
@@ -157,9 +159,7 @@ class UpsertTable:
         os.replace(tmp, self._manifest_path(batch_id))
 
     def _bucket_expr(self):
-        return F.pmod(
-            F.xxhash64(F.col(self.key_col)), F.lit(self.num_buckets)
-        )
+        return F.pmod(eq_key(F.col(self.key_col)), F.lit(self.num_buckets))
 
     def _data_dir(self, batch_id: int) -> str:
         return f"d-{batch_id:010d}"

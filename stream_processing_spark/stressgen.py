@@ -38,6 +38,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stream_processing_spark.functions.keys import value_hash
+
 _VERSION = "stress-v3"
 
 DEFAULT_ROOT = os.environ.get(
@@ -60,9 +62,7 @@ EMB_DIM = 64
 def _h(salt: str, *cols: Column) -> Column:
     """Uniform 24-bit integer from md5 — deterministic, engine-portable."""
     parts = [F.lit(salt)] + [c.cast("string") for c in cols]
-    return F.conv(F.substring(F.md5(F.concat_ws(":", *parts)), 1, 6), 16, 10).cast(
-        "long"
-    )
+    return value_hash(F.concat_ws(":", *parts), 6)
 
 
 # ------------------------------------------------------------------ events

@@ -463,6 +463,58 @@ def test_connected_components_rejects_nonpositive_max_iter(
         connected_components(edges, max_iter=max_iter, algorithm=algorithm)
 
 
+@pytest.mark.parametrize("fn", ["jaccard_pairs", "containment_pairs"])
+@pytest.mark.parametrize("dtype", ["double", "int"])
+def test_pair_overlap_rejects_unhashable_shingle_types(spark, fn, dtype):
+    # ADVICE r14 #2: sh is string shingles or shingles(hash64=True)
+    # bigints; anything else is refused instead of sniffed
+    from stream_processing_spark.functions import dedup as dd
+
+    sh = spark.createDataFrame([(1, 1.0), (2, 1.0)], "doc_id int, sh double")
+    sh = sh.withColumn("sh", F.col("sh").cast(dtype))
+    with pytest.raises(ValueError, match="string shingles or bigint"):
+        getattr(dd, fn)(sh, 0.5)
+
+
+def test_value_hash_matches_its_duckdb_twin(spark):
+    from stream_processing_spark.functions.keys import value_hash
+
+    words = ["", "a", "near-dup", "ünïcode"]
+    df = spark.createDataFrame([(w,) for w in words], "x string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT unnest(?::VARCHAR[]) AS x", [words])
+    for n in (1, 8, 15):
+        got = sorted(
+            (r.x, r.v) for r in df.select("x", value_hash("x", n).alias("v"))
+            .collect()
+        )
+        want = sorted(con.execute(
+            f"SELECT x, CAST('0x' || substr(md5(x), 1, {n}) AS BIGINT) FROM t"
+        ).fetchall())
+        assert got == want, n
+    con.close()
+    for n in (0, 16):
+        with pytest.raises(ValueError, match="n_hex"):
+            value_hash("x", n)
+
+
+@pytest.mark.parametrize(
+    "algorithm,max_iter", [("propagation", 50), ("auto", 2)]
+)
+def test_connected_components_raises_when_rounds_run_out(
+    spark, algorithm, max_iter
+):
+    # a 60-node path needs 59 propagation rounds: an exhausted budget
+    # must fail loudly, not return the unconverged labels (10
+    # components for propagation, 57 for auto)
+    from stream_processing_spark.operators.graph import connected_components
+
+    path = spark.range(59).selectExpr("id AS src", "id + 1 AS dst")
+    budget = f"{algorithm!r}.*{max_iter} rounds"
+    with pytest.raises(RuntimeError, match=budget):
+        connected_components(path, max_iter=max_iter, algorithm=algorithm)
+
+
 @pytest.mark.parametrize(
     "name", ["streaming_ks_drift_monitor", "streaming_psi_drift_monitor"]
 )

@@ -21,7 +21,8 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_all_queries_return_rows(spark):
-    # queries without oracles still must run and return a stable schema
-    for name, spec in REGISTRY.items():
-        df = spec.spark(spark, SF_ORACLE)
+    # queries without oracles still must run and return a stable schema;
+    # the oracle'd ones are run, and their columns compared, above
+    for name in sorted(set(REGISTRY) - set(WITH_ORACLE)):
+        df = REGISTRY[name].spark(spark, SF_ORACLE)
         assert df.columns, name

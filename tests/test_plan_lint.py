@@ -25,7 +25,9 @@ Streaming queries are exempt (they execute on .start(), not lazily, and
 their plans are asserted in their own tests).
 
 A source lint keeps ``runtime.materialize`` the only barrier: no other
-code in the package calls ``localCheckpoint`` or ``checkpoint``.
+code in the package calls ``localCheckpoint`` or ``checkpoint``. Another
+keeps ``functions/keys.py`` the only module that chooses a hash: no
+other code calls ``xxhash64`` or ``conv``, in Python or in SQL text.
 """
 
 from __future__ import annotations
@@ -276,6 +278,40 @@ def test_barriers_go_through_materialize():
             todo.extend(ast.iter_child_nodes(node))
     assert not direct, (
         "call runtime.materialize instead of localCheckpoint/checkpoint: "
+        + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
+    )
+
+
+def test_hashes_go_through_keys():
+    # one spelling for hash keys: functions/keys.py decides between an
+    # equality-only key (eq_key) and an oracle-mirrored value hash
+    # (value_hash); nothing else calls the hash primitives or spells
+    # them inside expr/selectExpr/sql text
+    hashes = ("xxhash64", "conv")
+    root = pathlib.Path(stream_processing_spark.__file__).parent
+    direct = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "functions/keys.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "attr", getattr(func, "id", None))
+            text = "".join(
+                part.value
+                for arg in node.args
+                for part in ast.walk(arg)
+                if isinstance(getattr(part, "value", None), str)
+            )
+            if name in hashes or (
+                name in ("expr", "selectExpr", "sql")
+                and any(f"{h}(" in text for h in hashes)
+            ):
+                direct.append((rel, node.lineno))
+    assert not direct, (
+        "use functions/keys.py eq_key/value_hash instead of xxhash64/conv: "
         + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
     )
 
