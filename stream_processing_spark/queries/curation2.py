@@ -524,7 +524,7 @@ _RRF_DEPTH = 20  # per-retriever candidate depth feeding the fusion
     "Plan: both retrievers broadcast their 1-row query side and scan "
     "once; the rank windows run over ≤ depth-bounded candidate sets "
     "(the BM25 side only over term-matching docs), and the fusion "
-    "join is {_RRF_DEPTH}×2 rows — driver-negligible at any corpus "
+    f"join is {_RRF_DEPTH}×2 rows — driver-negligible at any corpus "
     "size because depth, not corpus, bounds it.",
 )
 def retrieval_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -636,10 +636,8 @@ _HEX_DIGITS = "0123456789abcdef"
     "different order across epochs; rand() gives neither). Output is "
     "the per-(epoch, shard) doc/char balance sheet that validates "
     "shard sizing before the write. Scale: the epoch fan-out is a "
-    "{_N_EPOCHS}-row Generate (explode), assignment is map-side md5, "
-    "and the only shuffle is the 16×epochs-row aggregate; the same "
-    "expression feeds shards.py's partitioned writer as the "
-    "partition column.",
+    f"{_N_EPOCHS}-row Generate (explode), assignment is map-side md5, "
+    "and the only shuffle is the 16×epochs-row aggregate.",
 )
 def epoch_shuffle_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

@@ -8,14 +8,20 @@ over a glob, `input_file_name()` as the machine identity, `rlike` as the
 regex engine. No custom scheduling; the filter runs inside whole-stage
 codegen.
 
+File identity is the FULL path through every reduction; the displayed
+``source_file`` basename is taken after it (once per file for -c/-l, per
+selected line otherwise), so two same-named files in different
+directories are two rows under -c/-l, as GNU grep prints them. The
+per-file -c/-l results sort inside one partition: no range-sampling job.
+
 Flag support and the scale story:
 - -i / -v / -F / -w / -x are pure predicate rewrites — still a single
   codegen'd scan+filter, zero shuffle.
 - -o (only-matching) is a regexp_extract_all + posexplode over selected
   lines — codegen'd, zero shuffle; -l (files-with-matches) is a
-  distinct over the file-name column (one tiny shuffle).
+  distinct over the full path (one tiny shuffle).
 - -n / -A / -B / -C / -m need per-file line order. Spark rows carry no intrinsic
-  order, so the scan materializes (input_file_block_start(),
+  order, so in these modes only the scan materializes (input_file_block_start(),
   monotonically_increasing_id()) AT READ TIME: block start is the
   in-file byte offset of the split and the id is increasing in read
   order within a split, so ordering by (offset, id) within each file
@@ -30,25 +36,38 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _lines(spark: SparkSession, path_glob: str) -> DataFrame:
-    return (
-        spark.read.text(path_glob)
-        # element_at(split(...), -1) = basename, matching the reference's
-        # "machine.{id}.log: " prefix (src/LogQuerier/server.py:30-33).
-        # __path keeps the FULL path as the file identity: two files with
-        # the same basename in different directories must not share a
-        # numbering partition.
-        .withColumn("__path", F.input_file_name())
-        .withColumn("source_file", F.element_at(F.split(F.input_file_name(), "/"), -1))
-        # file-order witnesses — MUST be evaluated at scan time (both
-        # functions return garbage after an exchange)
-        .withColumn("__off", F.input_file_block_start())
-        .withColumn("__id", F.monotonically_increasing_id())
-    )
+def _lines(spark: SparkSession, path_glob: str, numbered: bool = False) -> DataFrame:
+    df = spark.read.text(path_glob).withColumn("__path", F.input_file_name())
+    if not numbered:
+        return df
+    # file-order witnesses — MUST be evaluated at scan time (both
+    # functions return garbage after an exchange)
+    df = df.withColumn("__off", F.input_file_block_start())
+    return df.withColumn("__id", F.monotonically_increasing_id())
+
+
+def _basename() -> Column:
+    # matches the reference's "machine.{id}.log: " prefix (server.py:30-33)
+    return F.element_at(F.split("__path", "/"), -1).alias("source_file")
+
+
+def _by_file(df: DataFrame) -> DataFrame:
+    # a global orderBy would sample range bounds in extra jobs for a few
+    # rows; __path breaks basename ties deterministically
+    return df.coalesce(1).sortWithinPartitions("source_file", "__path").drop("__path")
+
+
+def _selected(pattern: str | list[str], invert: bool, *flags) -> tuple[str, Column]:
+    """(regex, selection predicate); ``flags`` are compile_pattern's
+    (ignore_case, fixed, word, line); a list is -e p1 -e p2 (any-match)."""
+    compile_ = compile_patterns if isinstance(pattern, list) else compile_pattern
+    pat = compile_(pattern, *flags)
+    sel = F.col("value").rlike(pat)
+    return pat, ~sel if invert else sel
 
 
 def compile_pattern(
@@ -133,57 +152,50 @@ def dgrep(
     """
     if context:
         after, before = max(after, context), max(before, context)
-    if isinstance(pattern, list):  # -e p1 -e p2 ... (any-match)
-        pat = compile_patterns(pattern, ignore_case, fixed, word, line)
-    else:
-        pat = compile_pattern(pattern, ignore_case, fixed, word, line)
-    df = _lines(spark, path_glob)
-    sel = F.col("value").rlike(pat)
-    if invert:
-        sel = ~sel
+    pat, sel = _selected(pattern, invert, ignore_case, fixed, word, line)
+    numbered = bool(line_numbers or after or before or max_count is not None)
+    df = _lines(spark, path_glob, numbered)
+    cols = ["line_no"] if line_numbers else []
 
-    def _extract(selected: DataFrame) -> DataFrame:
+    def _emit(kept: DataFrame) -> DataFrame:
+        out = kept.select(_basename(), *cols, "value")
+        if not only_matching:
+            return out
         # -o: every occurrence on its own row, left-to-right order kept
         # via posexplode (grep prints occurrences in line order)
-        cols = ["source_file"] + (["line_no"] if line_numbers else [])
-        return selected.select(
+        return out.select(
+            "source_file",
             *cols,
             F.posexplode(
                 F.regexp_extract_all(F.col("value"), F.lit(pat), F.lit(0))
             ).alias("__mpos", "value"),
         ).drop("__mpos")
 
-    if not (line_numbers or after or before or max_count is not None):
-        out = df.filter(sel).select("source_file", "value")
-        return _extract(out) if only_matching else out
+    if not numbered:
+        return _emit(df.filter(sel))
 
     w = Window.partitionBy("__path").orderBy("__off", "__id")
-    df = df.withColumn("line_no", F.row_number().over(w)).withColumn(
-        "__sel", sel.cast("int")
-    )
+    df = df.withColumn("line_no", F.row_number().over(w))
+    df = df.withColumn("__sel", sel.cast("int"))
     if max_count is not None:
         # -m: only the first m selected lines per file stay selected —
         # a running count over the SAME per-file window the numbering
         # uses (one shuffle total, shared by all window functions)
-        run = F.sum("__sel").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
+        run = F.sum("__sel").over(w.rowsBetween(Window.unboundedPreceding, 0))
         df = df.withColumn(
             "__sel",
             F.when((F.col("__sel") == 1) & (run <= max_count), 1).otherwise(0),
         )
     keep = F.col("__sel") == 1
-    if only_matching:
-        cols = ["source_file"] + (["line_no"] if line_numbers else []) + ["value"]
-        return _extract(df.filter(keep).select(*cols))
+    if only_matching:  # -o suppresses context lines, like GNU grep
+        return _emit(df.filter(keep))
     if after:  # a selected line at m prints m..m+A → look back A rows
         df = df.withColumn("__a", F.max("__sel").over(w.rowsBetween(-after, 0)))
         keep = keep | (F.col("__a") == 1)
     if before:  # a selected line at m prints m-B..m → look ahead B rows
         df = df.withColumn("__b", F.max("__sel").over(w.rowsBetween(0, before)))
         keep = keep | (F.col("__b") == 1)
-    cols = ["source_file"] + (["line_no"] if line_numbers else []) + ["value"]
-    return df.filter(keep).select(*cols)
+    return _emit(df.filter(keep))
 
 
 def dgrep_files(
@@ -198,23 +210,15 @@ def dgrep_files(
 ) -> DataFrame:
     """`grep -l` mode: names of files with at least one selected line.
 
-    Plan: scan+filter in codegen, then a distinct on the (tiny) file-name
-    column — the shuffle carries one short string per matching FILE, and
+    Plan: scan+filter in codegen, then a distinct on the full path —
+    the shuffle carries one short string per matching FILE, and
     AQE collapses it to almost nothing. (grep -l also stops reading a
     file at its first match; a declarative scan can't early-exit per
     file, but the filter prunes everything but the winners immediately.)
     """
-    if isinstance(pattern, list):
-        pat = compile_patterns(pattern, ignore_case, fixed, word, line)
-    else:
-        pat = compile_pattern(pattern, ignore_case, fixed, word, line)
-    df = _lines(spark, path_glob)
-    sel = F.col("value").rlike(pat)
-    if invert:
-        sel = ~sel
-    return (
-        df.filter(sel).select("source_file").distinct().orderBy("source_file")
-    )
+    _, sel = _selected(pattern, invert, ignore_case, fixed, word, line)
+    paths = _lines(spark, path_glob).filter(sel).select("__path").distinct()
+    return _by_file(paths.select(_basename(), "__path"))
 
 
 def dgrep_count(
@@ -234,19 +238,9 @@ def dgrep_count(
     exactly like `grep -c -m`. The cluster TOTAL is `df.agg(sum(...))` —
     computed by the caller (cli.py prints it like client.py:151-152).
     """
-    if isinstance(pattern, list):  # -e p1 -e p2 ...
-        pat = compile_patterns(pattern, ignore_case, fixed, word, line)
-    else:
-        pat = compile_pattern(pattern, ignore_case, fixed, word, line)
-    df = _lines(spark, path_glob)
-    sel = F.col("value").rlike(pat)
-    if invert:
-        sel = ~sel
+    _, sel = _selected(pattern, invert, ignore_case, fixed, word, line)
     cnt = F.sum(sel.cast("long"))
     if max_count is not None:
         cnt = F.least(cnt, F.lit(max_count).cast("long"))
-    return (
-        df.groupBy("source_file")
-        .agg(cnt.alias("match_count"))
-        .orderBy("source_file")
-    )
+    counts = _lines(spark, path_glob).groupBy("__path").agg(cnt.alias("match_count"))
+    return _by_file(counts.select(_basename(), "match_count", "__path"))

@@ -58,6 +58,8 @@ GATE_MODULES = {
     "test_r14_s2_ops",
     "test_rainstorm_plans",
     "test_streaming",
+    "test_grep",
+    "test_grep_differential",
 }
 
 

@@ -537,3 +537,13 @@ def test_drift_monitor_releases_cache_when_drain_fails(
     with pytest.raises(TimeoutError):
         REGISTRY[name].spark(spark, SF_SMOKE)
     assert persistent().size() == before
+
+
+def test_query_docs_have_no_unformatted_placeholders():
+    # a doc line that names a module constant in braces but lacks its f
+    # prefix prints the placeholder itself into QUERIES.md
+    import re
+
+    pat = re.compile(r"\{_[A-Z][A-Z_]*\}")
+    bad = sorted(n for n, s in REGISTRY.items() if pat.search(s.doc))
+    assert bad == []

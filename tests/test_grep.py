@@ -365,6 +365,51 @@ def test_line_numbers_distinct_dirs_same_basename(spark, tmp_path):
     assert got == {("app.log", 3), ("app.log", 1)}
 
 
+def test_count_and_files_distinct_dirs_same_basename(spark, tmp_path):
+    # -c and -l give one row per FILE (as GNU grep does), not one per
+    # basename: the two app.log files are grouped by full path and ordered
+    # by it, so dirA's row comes first on every run
+    for sub, body in [("dirA", "hit\nx\nhit\n"), ("dirB", "hit\n")]:
+        (tmp_path / sub).mkdir()
+        (tmp_path / sub / "app.log").write_text(body)
+    glob = f"{tmp_path}/*/app.log"
+    rows = dgrep_count(spark, "hit", glob).collect()
+    assert [tuple(r) for r in rows] == [("app.log", 2), ("app.log", 1)]
+    assert dgrep_count(spark, "hit", glob).columns == ["source_file", "match_count"]
+    from stream_processing_spark.sources.grep import dgrep_files
+
+    files = dgrep_files(spark, "hit", glob).collect()
+    assert [tuple(r) for r in files] == [("app.log",), ("app.log",)]
+    # a file without a hit still gets its 0 under -c, and none under -l
+    rows = dgrep_count(spark, "x", glob).collect()
+    assert [tuple(r) for r in rows] == [("app.log", 1), ("app.log", 0)]
+    assert len(dgrep_files(spark, "x", glob).collect()) == 1
+
+
+def test_dgrep_count_runs_at_most_two_jobs(spark, logdir):
+    # one scan+partial-aggregate job and one final job; a global orderBy
+    # would add range-bound sampling jobs on top
+    sc, gid = spark.sparkContext, "test-grep-count-jobs"
+    sc.setJobGroup(gid, "dgrep_count job budget")
+    try:
+        rows = dgrep_count(spark, FREQ_IP, f"{logdir}/machine.*.log").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r.match_count for r in rows] == [600] * N_MACHINES
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(gid)) <= 2
+
+
+def test_dgrep_count_plan_takes_basename_after_aggregate(spark, logdir):
+    df = dgrep_count(spark, FREQ_IP, f"{logdir}/machine.*.log")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower(), plan
+    # the tree prints top-down: everything after the first aggregate line
+    # runs below it, i.e. once per scanned line
+    below = plan[plan.index("HashAggregate"):]
+    assert "split(" not in below and "element_at(" not in below, plan
+
+
 def test_grep_multi_pattern_any_match(spark, logdir):
     # -e MED -e RARE: every machine has 300 + 100 = 400 selected lines
     # (the two IPs never share a line), and the count equals the sum of
