@@ -299,6 +299,7 @@ def main() -> None:
 
     ensure_protobuf_runtime()
 
+    from stream_processing_spark.metrics import noop_walls
     from stream_processing_spark.session import get_spark
     from stream_processing_spark.queries import REGISTRY
 
@@ -340,26 +341,12 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     def _measure_pass(runs: int) -> None:
-        import gc
-
         for name in BENCH_QUERIES:
             spec = REGISTRY[name]
-            best = timings.get(name, float("inf"))
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                spec.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
-            # release checkpoint/cache blocks between queries: the
-            # eager localCheckpoints (LPA, spearman, the drift
-            # monitors) are reclaimed by ContextCleaner only after
-            # both the Python refs and the JVM weak refs clear — left
-            # alone, ~80 queries of accumulated blocks degraded the
-            # shared session ~4x for late-positioned queries (r12)
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            walls = noop_walls(lambda: spec.spark(spark, sf_dir), runs)
+            timings[name] = round(
+                min(timings.get(name, float("inf")), *walls), 3
+            )
 
     # best of 2: the first run pays whole-stage-codegen compilation
     # and JIT; steady-state is what a long-running cluster sees

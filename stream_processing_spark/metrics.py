@@ -1,4 +1,9 @@
-"""Shuffle-volume accounting from Spark's own SQLMetrics.
+"""Query timing and shuffle-volume accounting.
+
+``noop_walls`` is the one timer behind bench.py and tools/: build the
+query, force it through the noop sink, take the wall, release memory.
+
+Shuffle volume comes from Spark's own SQLMetrics.
 
 The 100 TB claims about "ids-only shuffles" and banded-join bounds were
 plan-verified (no exchange where none belongs) and, since round 3,
@@ -16,11 +21,42 @@ disabled — SQLMetrics are accumulators, not UI state.
 
 from __future__ import annotations
 
+import gc
+import time
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
 #: metric keys as registered by ShuffleExchangeExec's write metrics
 BYTES_KEY = "shuffleBytesWritten"
 RECORDS_KEY = "shuffleRecordsWritten"
+
+
+def noop_walls(build: Callable[[], DataFrame], runs: int) -> list[float]:
+    """Wall seconds of ``runs`` timed runs, each ``build()`` followed by
+    a noop-sink write (every row computed, nothing collected).
+
+    ``build()`` is on the clock, so the jobs that eager barriers run
+    while a query is built are timed with the write that runs the rest.
+
+    After the runs, checkpoint/cache blocks are released: the eager
+    localCheckpoints (LPA, spearman, the drift monitors) are reclaimed
+    by ContextCleaner only after both the Python refs and the JVM weak
+    refs clear. Left alone, ~80 queries of accumulated blocks degraded
+    a shared session ~4x for late-positioned queries (r12)."""
+    if runs < 1:
+        raise ValueError(f"runs must be >= 1, got {runs}")
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        df = build()
+        df.write.format("noop").mode("overwrite").save()
+        walls.append(time.perf_counter() - t0)
+    jvm = df.sparkSession.sparkContext._jvm
+    del df
+    gc.collect()
+    jvm.System.gc()
+    return walls
 
 
 def _sum_metric(node, key: str, seen: set[int]) -> int:

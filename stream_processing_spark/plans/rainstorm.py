@@ -128,13 +128,14 @@ def register_stateful_op(name: str, fn: Callable, state0=None) -> None:
     USER_STATEFUL_OPS[name] = (fn, state0)
 
 
-def _load_callable(ref: str) -> Callable:
+def load_callable(ref: str) -> Callable:
     """Resolve ``pkg.module:fn`` or ``/path/to/file.py:fn`` — the
     analogue of the reference taking any op executable path
-    (src/Streaming/Rainstorm.py:9-24)."""
+    (src/Streaming/Rainstorm.py:9-24). tools/ab.py resolves its query
+    variants through it too."""
     mod, sep, attr = ref.rpartition(":")
     if not sep:
-        raise ValueError(f"op ref {ref!r} must be 'module:function' or 'file.py:function'")
+        raise ValueError(f"ref {ref!r} must be 'module:function' or 'file.py:function'")
     if mod.endswith(".py"):
         import hashlib
         import importlib.util
@@ -167,14 +168,14 @@ def parse_op(spec: str) -> tuple[Op, bool]:
     parts = shlex.split(spec)
     name, args = parts[0], parts[1:]
     if name == "udf":
-        fn = _load_callable(args[0])
+        fn = load_callable(args[0])
         extra = tuple(args[1:])
         rec = (lambda k, v: fn(k, v, *extra)) if extra else fn
         return (lambda df: T.flat_map(df, rec)), False
     if name == "udf_stateful":
         from stream_processing_spark.streaming.stateful import stateful_flat_map
 
-        sfn = _load_callable(args[0])
+        sfn = load_callable(args[0])
         extra = tuple(args[1:])
         srec = (lambda k, v, st: sfn(k, v, st, *extra)) if extra else sfn
         return (lambda df: stateful_flat_map(df, srec)), True

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from stream_processing_spark.catalog import load_table
 from stream_processing_spark.functions.keys import eq_key
 from stream_processing_spark.queries import register
-from stream_processing_spark.runtime import materialize
+from stream_processing_spark.runtime import materialize, rebalance_for_expansion
 
 # ------------------------------------------------------ decontamination
 
@@ -62,7 +62,7 @@ def _ngram_sql(n: int) -> str:
 )
 def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = rebalance_for_expansion(docs)
     split = F.when(F.md5(F.col("text").cast("binary")) < "cc", "train").otherwise(
         "eval"
     )
@@ -256,7 +256,7 @@ def embedding_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quality_bigram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = rebalance_for_expansion(docs)
     toks = F.split(F.col("text"), " ")
     length = F.size(toks)
     zipped = F.arrays_zip(F.slice(toks, 1, length - 1), F.slice(toks, 2, length - 1))
@@ -802,7 +802,7 @@ def quality_lm_avg_bigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_avg_bigram_p(docs: DataFrame) -> DataFrame:
     """Per-doc mean corpus-bigram probability — see the registry doc
     above; shared with quality_ccnet_buckets."""
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = rebalance_for_expansion(docs)
     toks = F.split(F.col("text"), " ")
     length = F.size(toks)
     zipped = F.arrays_zip(F.slice(toks, 1, length - 1), F.slice(toks, 2, length - 1))
@@ -970,7 +970,7 @@ _COOC_TOP_VOCAB = 50
 )
 def token_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    docs = rebalance_for_expansion(docs)
     toks = (
         docs.select(
             "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")

@@ -14,7 +14,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stream_processing_spark.catalog import table_path
+from stream_processing_spark.catalog import (
+    events_ts_layout,
+    load_table,
+    normalize_events_ts,
+    table_path,
+)
 from stream_processing_spark.queries import register
 from stream_processing_spark.streaming.job import (
     STATE_STORE_KEY,
@@ -33,52 +38,24 @@ def _stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# footer layout per sf_dir — the probe is schema-only but not free, and
-# every streaming query calls it; one probe per fixture dir is enough
-_TS_LAYOUT_CACHE: dict[str, str] = {}
-
-
-def _events_ts_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Probe the events parquet footer (cheap batch-read of the schema)
-    for the ts physical type — the driver's testdata has shipped both
-    TIMESTAMP(NANOS) (reads as bigint under nanosAsLong) and plain
-    TIMESTAMP micros (reads as timestamp_ntz). Same normalization as
-    catalog.load_table, applied to the stream's declared schema.
-
-    SIDE EFFECT (deliberate, same contract as catalog.load_table): pins
-    ``spark.sql.legacy.parquet.nanosAsLong=true`` and the session time
-    zone to UTC on every call — any events consumer needs both set for
-    wall-clock values to match the oracle's naive timestamps. The
-    footer probe itself is cached per sf_dir; the conf pinning is not
-    (a fresh driver session must still get pinned)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if sf_dir not in _TS_LAYOUT_CACHE:
-        probe = spark.read.parquet(table_path(sf_dir, "events"))
-        _TS_LAYOUT_CACHE[sf_dir] = dict(probe.dtypes).get("ts", "timestamp")
-    return _TS_LAYOUT_CACHE[sf_dir]
-
-
-def _events_schema_and_norm(ts_layout: str):
-    """(readStream schema DDL, ts normalizer) for a given footer layout."""
+def _events_schema(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(readStream schema DDL, ts layout) of the events parquet, from
+    catalog.events_ts_layout (which also pins the session confs every
+    events consumer needs); apply ``normalize_events_ts`` to the read."""
+    layout = events_ts_layout(spark, sf_dir)
     schema = (
-        f"event_id bigint, ts {ts_layout}, user_id bigint, "
+        f"event_id bigint, ts {layout}, user_id bigint, "
         "event_type string, value double, props string"
     )
-    if ts_layout == "bigint":
-        norm = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        norm = F.col("ts").cast("timestamp")
-    return schema, norm
+    return schema, layout
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, ts normalized to session-TZ
-    micros under a pinned UTC session (see _events_ts_layout)."""
-    schema, norm = _events_schema_and_norm(_events_ts_layout(spark, sf_dir))
+    micros under a pinned UTC session (see catalog.events_ts_layout)."""
+    schema, layout = _events_schema(spark, sf_dir)
     raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, "events"))
-    return raw.withColumn("ts", norm)
-
+    return normalize_events_ts(raw, layout)
 
 
 # Streaming state-partition sizing: a stateful streaming query's shuffle
@@ -421,7 +398,7 @@ def streaming_tws_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.tws import tws_timer_flush_counts
 
     _assert_tws_runtime(spark)
-    schema, _ = _events_schema_and_norm(_events_ts_layout(spark, sf_dir))
+    schema, _ = _events_schema(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="stream_src_events_flush_")
     for copy in ("a", "b"):
         os.symlink(
@@ -462,7 +439,7 @@ def streaming_tws_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.windows import dedup_within_watermark
 
-    schema, norm = _events_schema_and_norm(_events_ts_layout(spark, sf_dir))
+    schema, layout = _events_schema(spark, sf_dir)
     # stage the file TWICE (replayed delivery)
     d = tempfile.mkdtemp(prefix="stream_src_events_dup_")
     for copy in ("a", "b"):
@@ -472,11 +449,11 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxFilesPerTrigger=1 → the two copies arrive in SEPARATE
     # micro-batches, so dedup must work across batches via the state
     # store, not just within one batch
-    raw = (
+    raw = normalize_events_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-        .withColumn("ts", norm)
+        .parquet(d),
+        layout,
     )
     deduped = dedup_within_watermark(raw, ["event_id"], ts_col="ts", watermark="1 hour")
     out = _drain_memory(deduped.select("event_id"), spark, "append")
@@ -496,8 +473,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "standard enrichment topology for dimension lookups at scale.",
 )
 def streaming_static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stream_processing_spark.catalog import load_table
-
     nation = load_table(spark, sf_dir, "nation")
     src = _events_stream(spark, sf_dir)
     joined = src.join(
@@ -903,7 +878,6 @@ _N_AGREE_SQL = " + ".join(
     "carries its signature-agreement score).",
 )
 def streaming_ingest_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stream_processing_spark.catalog import load_table
     from stream_processing_spark.streaming.ingest_dedup import (
         StreamingIngestDedup,
     )
@@ -954,12 +928,7 @@ def streaming_ingest_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
 def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.upsert import UpsertTable
 
-    schema, norm = _events_schema_and_norm(_events_ts_layout(spark, sf_dir))
-    ev = (
-        spark.read.schema(schema)
-        .parquet(table_path(sf_dir, "events"))
-        .withColumn("ts", norm)
-    )
+    ev = load_table(spark, sf_dir, "events")
     changes = ev.select(
         F.col("user_id").alias("uid"),
         F.when(F.col("event_id") % 10 == 0, F.lit("delete"))
@@ -1152,12 +1121,7 @@ def streaming_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.scd2 import Scd2Table
 
-    schema, norm = _events_schema_and_norm(_events_ts_layout(spark, sf_dir))
-    ev = (
-        spark.read.schema(schema)
-        .parquet(table_path(sf_dir, "events"))
-        .withColumn("ts", norm)
-    )
+    ev = load_table(spark, sf_dir, "events")
     changes = ev.where(F.col("user_id").isNotNull()).select(
         F.col("user_id").alias("uid"),
         F.unix_micros("ts").alias("ts"),

@@ -40,6 +40,28 @@ def duck():
     con.close()
 
 
+@pytest.fixture(scope="session")
+def streaming_run(spark):
+    """One drained run per ``streaming_*`` query at SF_ORACLE, shared by
+    the oracle test and the micro-batch plan lint: ``run(name)`` returns
+    the query's frame and the micro-batch plans its drains captured.
+    A drain costs seconds to tens of seconds, and both tests need the
+    same run."""
+    from stream_processing_spark.queries import REGISTRY
+    from stream_processing_spark.queries import streaming_queries as sq
+
+    runs: dict = {}
+
+    def run(name):
+        if name not in runs:
+            sq.CAPTURED_PLANS.clear()
+            df = REGISTRY[name].spark(spark, SF_ORACLE)
+            runs[name] = (df, list(sq.CAPTURED_PLANS))
+        return runs[name]
+
+    return run
+
+
 # ---------------------------------------------------------------------------
 # Driver-window fast gate (VERDICT r13 item 6; see pytest.ini). Every
 # test in these modules gets the `gate` marker; a bare `pytest tests/`
@@ -60,6 +82,8 @@ GATE_MODULES = {
     "test_streaming",
     "test_grep",
     "test_grep_differential",
+    "test_timing",
+    "test_catalog",
 }
 
 

@@ -61,6 +61,18 @@ def test_bigint_nanos_footer_layout(spark, tmp_path):
     )
 
 
+def test_unknown_ts_layout_fails_on_the_batch_and_stream_paths(spark, tmp_path):
+    """A third footer layout fails at load time on both paths, since
+    both go through catalog.events_ts_layout."""
+    from stream_processing_spark.queries.streaming_queries import _events_stream
+
+    d = _write_events_variant(spark, str(tmp_path), F.col("ts").cast("string"))
+    with pytest.raises(TypeError, match="'string'"):
+        _events_stream(spark, d)
+    with pytest.raises(TypeError, match="'string'"):
+        load_table(spark, d, "events")
+
+
 def test_unknown_table_raises(spark):
     with pytest.raises(KeyError):
         load_table(spark, SF, "nope")

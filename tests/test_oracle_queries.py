@@ -13,9 +13,12 @@ WITH_ORACLE = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, streaming_run, name):
     spec = REGISTRY[name]
-    sdf = spec.spark(spark, SF_ORACLE)
+    if name.startswith("streaming_"):
+        sdf, _ = streaming_run(name)
+    else:
+        sdf = spec.spark(spark, SF_ORACLE)
     rel = duck.sql(spec.oracle)
     compare(sdf, rel, name=name)
 

@@ -27,7 +27,9 @@ their plans are asserted in their own tests).
 A source lint keeps ``runtime.materialize`` the only barrier: no other
 code in the package calls ``localCheckpoint`` or ``checkpoint``. Another
 keeps ``functions/keys.py`` the only module that chooses a hash: no
-other code calls ``xxhash64`` or ``conv``, in Python or in SQL text.
+other code calls ``xxhash64`` or ``conv``, in Python or in SQL text. A
+third keeps ``metrics.noop_walls`` the only query timer: bench.py and
+tools/ write to the noop sink only through it.
 """
 
 from __future__ import annotations
@@ -282,6 +284,27 @@ def test_barriers_go_through_materialize():
     )
 
 
+def test_timers_go_through_noop_walls():
+    # one spelling for timing a query: bench.py and tools/ time through
+    # metrics.noop_walls, which decides what is on the clock and when
+    # memory is released
+    repo = pathlib.Path(stream_processing_spark.__file__).parent.parent
+    direct = []
+    for path in [repo / "bench.py", *sorted((repo / "tools").glob("*.py"))]:
+        rel = path.relative_to(repo).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "format"
+                and any(getattr(a, "value", None) == "noop" for a in node.args)
+            ):
+                direct.append((rel, node.lineno))
+    assert not direct, (
+        "time queries with metrics.noop_walls instead of a noop write: "
+        + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
+    )
+
+
 def test_hashes_go_through_keys():
     # one spelling for hash keys: functions/keys.py decides between an
     # equality-only key (eq_key) and an oracle-mirrored value hash
@@ -322,19 +345,20 @@ def test_hashes_go_through_keys():
 # plan (explainInternal survives termination) and this test lints the
 # capture under the same bans. foreachBatch-internal batch plans (the
 # ingest/upsert sinks' own jobs) are not part of the stream's plan —
-# those modules' plan shapes are asserted in their own tests.
+# those modules' plan shapes are asserted in their own tests. The run
+# is the oracle test's sf0.01 drain (conftest.streaming_run): none of
+# these bans depends on data size, since a join without equi keys
+# plans as BroadcastNestedLoopJoin or CartesianProduct at any size and
+# a row-at-a-time UDF is BatchEvalPython at any size.
 
 
 @pytest.mark.parametrize(
     "name", [n for n in sorted(REGISTRY) if n.startswith("streaming_")]
 )
-def test_streaming_microbatch_plan_is_scale_safe(spark, name):
-    from stream_processing_spark.queries import streaming_queries as sq
-
-    sq.CAPTURED_PLANS.clear()
-    REGISTRY[name].spark(spark, SF)
-    assert sq.CAPTURED_PLANS, f"{name}: no micro-batch plan captured"
-    for plan in sq.CAPTURED_PLANS:
+def test_streaming_microbatch_plan_is_scale_safe(streaming_run, name):
+    _, plans = streaming_run(name)
+    assert plans, f"{name}: no micro-batch plan captured"
+    for plan in plans:
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "CartesianProduct" not in plan, plan
         assert "BatchEvalPython" not in plan, plan

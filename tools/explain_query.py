@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,6 +25,7 @@ def main() -> int:
     name = args[0]
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
 
+    from stream_processing_spark.metrics import noop_walls
     from stream_processing_spark.queries import REGISTRY
     from stream_processing_spark.session import get_spark
 
@@ -42,9 +42,8 @@ def main() -> int:
     df = spec.spark(spark, sf_dir)
     df.explain("formatted")
     if run:
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        print(f"\nran end-to-end in {time.perf_counter() - t0:.3f}s at {sf_dir}")
+        [wall] = noop_walls(lambda: df, 1)
+        print(f"\nran end-to-end in {wall:.3f}s at {sf_dir}")
     return 0
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(
@@ -25,6 +24,7 @@ sys.path.insert(
 
 
 def main() -> int:
+    from stream_processing_spark.metrics import noop_walls
     from stream_processing_spark.session import get_spark
     from stream_processing_spark.queries import REGISTRY
 
@@ -47,11 +47,9 @@ def main() -> int:
 
         sf_dir = ensure_sf1(spark)
 
-    t0 = time.perf_counter()
-    REGISTRY["graph_label_propagation"].spark(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    wall = time.perf_counter() - t0
+    [wall] = noop_walls(
+        lambda: REGISTRY["graph_label_propagation"].spark(spark, sf_dir), 1
+    )
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

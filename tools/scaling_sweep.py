@@ -248,6 +248,7 @@ SF1_QUERIES = [
 
 def main() -> None:
     from stream_processing_spark.compat import ensure_protobuf_runtime
+    from stream_processing_spark.metrics import noop_walls
     from stream_processing_spark.queries import REGISTRY
     from stream_processing_spark.session import get_spark
 
@@ -264,14 +265,11 @@ def main() -> None:
         spec = REGISTRY[name]
         results[name] = {}
         for sf in SFS:
-            best = float("inf")
-            for _ in range(2):  # best-of-2: steady-state, like bench.py
-                t0 = time.perf_counter()
-                spec.spark(spark, f"/root/testdata/{sf}").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results[name][sf] = round(best, 3)
+            # best-of-2: steady-state, like bench.py
+            walls = noop_walls(
+                lambda: spec.spark(spark, f"/root/testdata/{sf}"), 2
+            )
+            results[name][sf] = round(min(walls), 3)
     for name, fn in CUSTOM.items():
         results[name] = {}
         for sf in SFS:
@@ -348,21 +346,11 @@ def main() -> None:
         spec = REGISTRY[name]
         base = results[name][SFS[2]] if name in results else None
         if base is None:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                spec.spark(spark, f"/root/testdata/{SFS[2]}").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            base = round(best, 3)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.spark(spark, sf1_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
+            walls = noop_walls(
+                lambda: spec.spark(spark, f"/root/testdata/{SFS[2]}"), 2
+            )
+            base = round(min(walls), 3)
+        best = min(noop_walls(lambda: spec.spark(spark, sf1_dir), 2))
         ratio = best / base if base else float("nan")
         print(f"| {name} | {base:.2f}s | {best:.2f}s | {ratio:.1f}× |")
         if ratio > worst1:
