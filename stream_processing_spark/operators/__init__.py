@@ -4,5 +4,4 @@ from stream_processing_spark.operators.transforms import (  # noqa: F401
     filter_pattern,
     flat_map,
     select_columns,
-    with_stream_id,
 )

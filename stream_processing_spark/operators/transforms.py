@@ -62,28 +62,16 @@ def filter_eq(df: DataFrame, column: str | Column, value) -> DataFrame:
 
 def count_by(df: DataFrame, *group_cols: str, alias: str = "cnt") -> DataFrame:
     """T5/T6/A1 — count per key (reference: tests/sample2_op2.py:8-17,
-    tests/mp4_demo2.py:6-10). Batch `groupBy().count()` corresponds to the
-    reference's final aggregate value; update-mode streaming (every
-    intermediate count) is the streaming variant in streaming/job.py.
+    tests/mp4_demo2.py:6-10). In a batch query the count is the
+    reference's final aggregate value; as the last op of a stateful
+    StreamJob (streaming/job.py, update mode) the same function is the
+    running count, emitting every intermediate count.
 
     Scale note: groupBy does a map-side partial aggregation before the
     shuffle, so the shuffle carries one row per (partition, key) — the
     correct plan at 100 TB for any realistic key cardinality.
     """
     return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias(alias))
-
-
-def with_stream_id(df: DataFrame, column: str = "stream_id") -> DataFrame:
-    """Source identity `filename:linenumber` (reference:
-    src/Streaming/worker.py:512-517). Spark doesn't number lines within a
-    file natively; a window over input_file_name is exact but adds a
-    shuffle, so we expose the cheap unique variant — reference keys only
-    need uniqueness (SURVEY.md §7.3).
-    """
-    return df.withColumn(
-        column,
-        F.concat_ws(":", F.input_file_name(), F.monotonically_increasing_id().cast("string")),
-    )
 
 
 def flat_map(

@@ -23,10 +23,10 @@ import shlex
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from stream_processing_spark.operators import transforms as T
 from stream_processing_spark.streaming.job import StreamJob
-from stream_processing_spark.streaming.stateful import running_count
 
 Op = Callable[[DataFrame], DataFrame]
 
@@ -43,8 +43,6 @@ def _select_columns(*idx: str) -> Op:
     names = ["key"] + [f"v{i}" for i in indices[1:]]
 
     def op(df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         out = T.select_columns(df, *indices, names=names)
         return out.select(
             "key", F.concat_ws(",", *[c for c in names[1:]]).alias("value")
@@ -57,12 +55,8 @@ def _filter_eq(index: str, value: str) -> Op:
     # T4: tests/sample2_op1.py — equality on CSV column; emits
     # (matched value, full row)
     def op(df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         col = F.split(F.col("value"), ",").getItem(int(index))
-        return df.filter(col == value).select(
-            col.alias("key"), F.col("value")
-        )
+        return T.filter_eq(df, col, value).select(col.alias("key"), "value")
 
     return op
 
@@ -70,15 +64,13 @@ def _filter_eq(index: str, value: str) -> Op:
 def _count_by_key() -> Op:
     # T5/T6: tests/sample2_op2.py, tests/mp4_demo2.py — running count per
     # key; update mode emits every change
-    return lambda df: running_count(df, "key").withColumnRenamed("cnt", "value")
+    return lambda df: T.count_by(df, "key", alias="value")
 
 
 def _count_by_column(index: str) -> Op:
     def op(df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         keyed = df.select(F.split(F.col("value"), ",").getItem(int(index)).alias("key"))
-        return running_count(keyed, "key").withColumnRenamed("cnt", "value")
+        return T.count_by(keyed, "key", alias="value")
 
     return op
 

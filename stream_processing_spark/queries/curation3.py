@@ -251,8 +251,8 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every MERGE path (keep/update/insert/delete) is exercised by the "
     "fixture data. Scale shape: one shuffle of the change stream by "
     "key + one sort-merge full outer join; no driver-side state. This "
-    "is the batch core of an incremental-ingest upsert pipeline (the "
-    "foreachBatch sink in streaming/sinks.py is the streaming shell).",
+    "is the batch core of an incremental-ingest upsert pipeline "
+    "(streaming/upsert.py's UpsertTable is the streaming shell).",
 )
 def cdc_apply_latest_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(

@@ -29,12 +29,15 @@ from stream_processing_spark.streaming.job import (
 )
 
 
-def _stream_dir(sf_dir: str, table: str) -> str:
+def _stream_dir(sf_dir: str, table: str, copies: int = 1) -> str:
     """FileStreamSource wants a DIRECTORY of files (the scale-correct shape:
     at 100 TB a stream is a directory micro-files land in, not one file).
-    The fixtures are single .parquet files, so stage a symlink directory."""
+    The fixtures are single .parquet files, so stage a symlink directory
+    holding ``copies`` links to the table (a replayed delivery is the
+    same file staged twice)."""
     d = tempfile.mkdtemp(prefix=f"stream_src_{table}_")
-    os.symlink(table_path(sf_dir, table), os.path.join(d, f"{table}.parquet"))
+    for i in range(copies):
+        os.symlink(table_path(sf_dir, table), os.path.join(d, f"{table}_{i}.parquet"))
     return d
 
 
@@ -399,15 +402,10 @@ def streaming_tws_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _assert_tws_runtime(spark)
     schema, _ = _events_schema(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="stream_src_events_flush_")
-    for copy in ("a", "b"):
-        os.symlink(
-            table_path(sf_dir, "events"), os.path.join(d, f"events_{copy}.parquet")
-        )
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(d)
+        .parquet(_stream_dir(sf_dir, "events", copies=2))
         .select(F.col("event_type").alias("key"))
     )
     flushed = tws_timer_flush_counts(src, flush_ms=400)
@@ -440,19 +438,13 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_spark.streaming.windows import dedup_within_watermark
 
     schema, layout = _events_schema(spark, sf_dir)
-    # stage the file TWICE (replayed delivery)
-    d = tempfile.mkdtemp(prefix="stream_src_events_dup_")
-    for copy in ("a", "b"):
-        os.symlink(
-            table_path(sf_dir, "events"), os.path.join(d, f"events_{copy}.parquet")
-        )
-    # maxFilesPerTrigger=1 → the two copies arrive in SEPARATE
-    # micro-batches, so dedup must work across batches via the state
-    # store, not just within one batch
+    # stage the file TWICE (replayed delivery); maxFilesPerTrigger=1 →
+    # the two copies arrive in SEPARATE micro-batches, so dedup must
+    # work across batches via the state store, not just within one batch
     raw = normalize_events_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(d),
+        .parquet(_stream_dir(sf_dir, "events", copies=2)),
         layout,
     )
     deduped = dedup_within_watermark(raw, ["event_id"], ts_col="ts", watermark="1 hour")

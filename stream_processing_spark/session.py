@@ -26,7 +26,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-appropriate defaults."""
+    """Build a SparkSession with scale-appropriate defaults, or return
+    the live one unchanged: its confs belong to whoever made it, so
+    neither these defaults nor the arguments are applied to it."""
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     master = master or f"local[{DEFAULT_CPUS}]"
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,37 +1,29 @@
-"""Pure-Python Spark DataSource for line files: batch splits, tail
-stream, key:value stream sink (Spark 4 Python Data Source API).
+"""Pure-Python Spark DataSource that tails append-only line files
+(Spark 4 Python Data Source API): ``StreamJob(source="tail")``'s source.
 
-The reference's source/sink surface is (a) a partitioned line scan
-(src/Streaming/worker.py:473-520 — each reader keeps 1/n of lines), (b)
-a tail-read unbounded source over ONE growing file
-(worker.py:503-511), and (c) a ``key:value``-lines sink flushed in
-batches (src/Streaming/leader.py:248-284). ``streaming/job.py`` and
-``streaming/tailer.py`` express those on the built-in file source; this
-module expresses the same three contracts as a first-class custom
-connector on the public Python Data Source API — the extension point
-Spark 4 added precisely so sources with semantics the built-ins lack
-(here: byte-offset record identity and single-file tailing) plug into
-Catalyst/Structured Streaming instead of living outside the engine.
+The reference's unbounded source is a tail read over ONE growing file
+(src/Streaming/worker.py:503-511). ``streaming/job.py``'s default
+source and ``streaming/tailer.py`` express it on the built-in file
+source; this module expresses it as a first-class custom stream reader
+on the public Python Data Source API — the extension point Spark 4
+added precisely so sources with semantics the built-ins lack (here:
+byte-offset record identity and single-file tailing) plug into
+Structured Streaming instead of living outside the engine. Batch line
+scans stay with ``spark.read.text`` (sources/grep.py), and the
+exactly-once ``key:value`` sink is StreamJob's.
 
 Design notes (100 TB stance):
 
-- **Batch reads split by BYTE RANGE** with first-byte line ownership
-  and partial-line discard — the TextInputFormat split rule — so a
-  500 GB line file fans out to parallel partitions without any driver
-  read. The driver only ever stats and globs.
 - **Record identity is (file, byte offset)** — stronger than the
   reference's ``filename:linenumber`` (worker.py:512-517): offsets are
   stable under split-parallel reads, line numbers are not.
 - **The stream reader's offsets are byte offsets** snapped to the last
-  complete line (partial-line holdback, same as streaming/tailer.py);
-  a backlog drains as MANY split partitions in one micro-batch, so
-  catch-up after downtime is cluster-parallel, not a serial tail.
-- **Filter pushdown**: substring filters (``value.contains(...)``) are
-  applied inside the Python scan before rows cross Arrow — the grep
-  fast path (G2) under the engine's own pushdown contract.
-- **The sink commits per (batchId, partition)** with atomic renames in
-  ``commit()``; a replayed batch rewrites the same names, so output is
-  idempotent without the reference's dedup dicts (leader.py:241-246).
+  complete line (partial-line holdback, same as streaming/tailer.py).
+- **A backlog drains as MANY byte-range splits** in one micro-batch,
+  with first-byte line ownership and partial-line discard — the
+  TextInputFormat split rule — so catch-up after downtime is
+  cluster-parallel, not a serial tail. The driver only ever stats and
+  globs.
 
 The append-only contract matches the reference (HyDFS files only ever
 grow between merges); truncation/rotation of the tailed file raises —
@@ -43,21 +35,10 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import uuid as _uuid
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceStreamWriter,
-    Filter,
-    InputPartition,
-    StringContains,
-    WriterCommitMessage,
-)
-from pyspark.sql.types import Row
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 _SCHEMA = "file string, offset bigint, value string"
 
@@ -72,7 +53,7 @@ class _Split(InputPartition):
     end: int
 
 
-def _iter_lines(path: str, start: int, end: int, needles: list[str]):
+def _iter_lines(path: str, start: int, end: int):
     """Yield (offset, line) for lines owned by [start, end), reading
     past ``end`` to finish the last owned line (TextInputFormat rule:
     a line belongs to the split containing its first byte)."""
@@ -91,10 +72,7 @@ def _iter_lines(path: str, start: int, end: int, needles: list[str]):
             if not raw:
                 break
             text = raw[:-1] if raw.endswith(b"\n") else raw
-            line = text.decode("utf-8", errors="replace")
-            if needles and not all(n in line for n in needles):
-                continue
-            yield pos, line
+            yield pos, text.decode("utf-8", errors="replace")
 
 
 def _split_ranges(size: int, split_bytes: int) -> list[tuple[int, int]]:
@@ -107,7 +85,7 @@ def _split_ranges(size: int, split_bytes: int) -> list[tuple[int, int]]:
 _ARROW_BATCH_ROWS = 8192
 
 
-def _iter_record_batches(path: str, start: int, end: int, needles):
+def _iter_record_batches(path: str, start: int, end: int):
     """Yield pyarrow RecordBatches of (file, offset, value) for the
     lines owned by [start, end). The Python Data Source API accepts
     RecordBatch iterators directly — one Arrow batch per ~8k lines
@@ -117,7 +95,7 @@ def _iter_record_batches(path: str, start: int, end: int, needles):
 
     offs: list[int] = []
     vals: list[str] = []
-    for pos, line in _iter_lines(path, start, end, needles):
+    for pos, line in _iter_lines(path, start, end):
         offs.append(pos)
         vals.append(line)
         if len(offs) >= _ARROW_BATCH_ROWS:
@@ -138,48 +116,6 @@ def _iter_record_batches(path: str, start: int, end: int, needles):
                 pa.array(vals, pa.string()),
             ],
             names=["file", "offset", "value"],
-        )
-
-
-class _LineBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("linetail requires a path")
-        self._split_bytes = int(options.get("split_bytes", 32 * 1024 * 1024))
-        self._needles: list[str] = []
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Handle substring filters on ``value`` inside the scan (rows
-        never cross Arrow); everything else stays with Catalyst."""
-        for f in filters:
-            if isinstance(f, StringContains) and f.attribute == ("value",):
-                self._needles.append(f.value)
-            else:
-                yield f
-
-    def partitions(self) -> Sequence[InputPartition]:
-        files = sorted(_glob.glob(self._path))
-        if not files and os.path.exists(self._path):
-            files = [self._path]
-        if not files:
-            # mirror the stream reader's guard: a typo'd path/glob
-            # would otherwise scan an empty split and look healthy
-            # while reading nothing
-            raise FileNotFoundError(
-                f"linetail batch path {self._path!r} matches no files"
-            )
-        out: list[InputPartition] = []
-        for fp in files:
-            for s, e in _split_ranges(os.path.getsize(fp), self._split_bytes):
-                out.append(_Split(fp, s, e))
-        return out or [_Split(self._path, 0, 0)]
-
-    def read(self, partition: _Split) -> Iterator["object"]:
-        if partition.end <= partition.start:
-            return
-        yield from _iter_record_batches(
-            partition.file, partition.start, partition.end, self._needles
         )
 
 
@@ -399,81 +335,15 @@ class _LineTailStreamReader(DataSourceStreamReader):
         if partition.end <= partition.start:
             return
         yield from _iter_record_batches(
-            partition.file, partition.start, partition.end, []
+            partition.file, partition.start, partition.end
         )
 
     def commit(self, end: dict) -> None:
         pass
 
 
-@dataclass
-class _KVCommit(WriterCommitMessage):
-    tmp: str
-    part: int
-    rows: int
-
-
-class _KVStreamWriter(DataSourceStreamWriter):
-    """``key:value`` lines sink (leader.py:272 format). Tasks write to
-    temp names under the sink's spool dir; ``commit`` renames to
-    batchId-deterministic names, so a replayed micro-batch overwrites
-    itself instead of duplicating. Micro-batches never overlap (and a
-    sink dir belongs to one query — batch file names would collide
-    otherwise), so after commit/abort every file still in the spool
-    belongs to a FAILED or speculatively-retried task of that batch —
-    both sweeps clear it, so crashed tasks can't leak temp files."""
-
-    def __init__(self, options):
-        self._dir = options.get("path")
-        if not self._dir:
-            raise ValueError("kvlines sink requires a path")
-        # deterministic name: Spark constructs separate writer instances
-        # for task-side write() and driver-side commit()/abort(), so the
-        # spool location must be a pure function of the sink path
-        self._spool = os.path.join(self._dir, ".spool")
-
-    def write(self, iterator: Iterator[Row]) -> _KVCommit:
-        from pyspark import TaskContext
-
-        part = TaskContext.get().partitionId()
-        os.makedirs(self._spool, exist_ok=True)
-        tmp = os.path.join(self._spool, f"tmp-{_uuid.uuid4().hex}")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                vals = [str(v) for v in row]
-                f.write(":".join(vals) + "\n")
-                n += 1
-        return _KVCommit(tmp=tmp, part=part, rows=n)
-
-    def _sweep_spool(self) -> None:
-        try:
-            for fn in os.listdir(self._spool):
-                try:
-                    os.remove(os.path.join(self._spool, fn))
-                except OSError:  # pragma: no cover - concurrent removal
-                    pass
-            os.rmdir(self._spool)
-        except OSError:  # spool never created (no task ran) or racing
-            pass
-
-    def commit(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:  # pragma: no cover - skipped empty task
-                continue
-            final = os.path.join(
-                self._dir, f"batch-{batchId:010d}-{m.part:05d}.txt"
-            )
-            os.replace(m.tmp, final)  # atomic; replay overwrites
-        self._sweep_spool()
-
-    def abort(self, messages, batchId: int) -> None:
-        self._sweep_spool()
-
-
 class LineTailDataSource(DataSource):
-    """``spark.read.format("linetail")`` / ``readStream`` /
-    ``writeStream.format("linetail")`` after
+    """``spark.readStream.format("linetail")`` after
     ``spark.dataSource.register(LineTailDataSource)``."""
 
     @classmethod
@@ -483,24 +353,10 @@ class LineTailDataSource(DataSource):
     def schema(self) -> str:
         return _SCHEMA
 
-    def reader(self, schema) -> DataSourceReader:
-        return _LineBatchReader(self.options)
-
     def streamReader(self, schema) -> DataSourceStreamReader:
         return _LineTailStreamReader(self.options)
 
-    def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamWriter:
-        return _KVStreamWriter(self.options)
 
-
-def register(spark, enable_filter_pushdown: bool = True) -> None:
-    """Register the connector. ``enable_filter_pushdown`` flips the
-    session conf ``spark.sql.python.filterPushdown.enabled`` (default
-    false in Spark 4.1) — a DELIBERATE session-wide side effect, same
-    contract as catalog.load_table's nanosAsLong pinning: batch reads
-    of this source fail at plan time without it because the reader
-    implements pushFilters. Pass False to leave the session conf
-    untouched (streaming-only use needs no pushdown)."""
-    if enable_filter_pushdown:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+def register(spark) -> None:
+    """Register the connector on ``spark``; no session conf is touched."""
     spark.dataSource.register(LineTailDataSource)

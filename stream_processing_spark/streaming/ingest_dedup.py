@@ -32,8 +32,8 @@ ints, duplicated per band: a deliberate ×bands storage trade to keep
 the per-batch join count at one).
 
 Exactly-once under replay: all outputs are partitioned by
-``__batch_id`` and written with dynamic partition overwrite (the
-sinks.py idempotent pattern), and the corpus side of the cross join
+``__batch_id`` and written with dynamic partition overwrite (a
+replayed batch rewrites only its own partition), and the corpus side of the cross join
 reads only partitions ``__batch_id < current`` — so a replayed batch
 neither duplicates pairs nor joins against its own half-written bands.
 Writes go sigs → pairs → bands, so no crash window can ever produce

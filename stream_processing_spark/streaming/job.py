@@ -143,11 +143,9 @@ class StreamJob:
             # id "<file>:<byte offset>" is stable under parallel
             # catch-up splits AND replay — strictly stronger than the
             # reference's filename:linenumber (worker.py:512-517).
-            # Registration only — the stream reader needs no filter
-            # pushdown, so no session conf is touched here.
             from stream_processing_spark.sources.pyds import register
 
-            register(self.spark, enable_filter_pushdown=False)
+            register(self.spark)
             if self.max_files_per_trigger is not None:
                 raise ValueError(
                     "max_files_per_trigger applies to the directory "

@@ -5,8 +5,10 @@ The reference's stateful contract: an operator process holds a
 (framework.py:52-54, worker.py:327-368). Structured Streaming's state
 store replaces the dict + log replay; this module exposes the same
 ergonomics through ``applyInPandasWithState`` for operators the built-in
-aggregates can't express, and a plain ``groupBy().count()`` for the one
-aggregate the reference actually ships (running count per key).
+aggregates can't express. The one aggregate the reference actually ships
+(running count per key) needs none of it: ``operators/transforms.count_by``
+as the last op of a stateful StreamJob keeps its counts in the state
+store.
 """
 
 from __future__ import annotations
@@ -31,17 +33,11 @@ COUNT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("cnt", LongType())])
 
 
-def running_count(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """The built-in path: Spark's state store keeps per-key counts;
-    update output mode emits every change (reference A1 semantics)."""
-    return df.groupBy(F.col(key_col).alias("key")).agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def stateful_running_count(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """The custom-operator path: identical semantics via
-    applyInPandasWithState, demonstrating arbitrary user state
-    (dict-per-key, like the reference operator processes). Use this shape
-    for logic groupBy().agg() can't express."""
+    """The custom-operator twin of ``transforms.count_by`` as a running
+    count: identical semantics via applyInPandasWithState, demonstrating
+    arbitrary user state (dict-per-key, like the reference operator
+    processes). Use this shape for logic groupBy().agg() can't express."""
 
     def update(
         key: tuple, batches: Iterable[pd.DataFrame], state: GroupState

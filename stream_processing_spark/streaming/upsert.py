@@ -1,7 +1,7 @@
 """Exactly-once streaming UPSERT into a versioned, key-bucketed table.
 
-``sinks.idempotent_batch_writer`` solves append-shaped output; CDC
-output is MERGE-shaped — each micro-batch carries upserts/deletes that
+StreamJob's per-batch directory overwrite (streaming/job.py) makes
+append-shaped output exactly-once; CDC output is MERGE-shaped — each micro-batch carries upserts/deletes that
 must be applied to the CURRENT table state. The batch core (collapse to
 latest-change-per-key, one full-outer join) is
 ``queries/curation3.cdc_apply_latest_changes``; this module is the

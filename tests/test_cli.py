@@ -4,7 +4,12 @@ test_rainstorm_plans / test_streaming (it runs a streaming job)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 from stream_processing_spark.cli import main
+from stream_processing_spark.session import get_spark
 
 
 def test_dgrep_count_via_cli(spark, tmp_path, capsys):
@@ -223,3 +228,46 @@ def test_cli_rainstorm_tail_mode(spark, tmp_path):
         for r in spark.read.text(outd + "/batch-*").collect()
     )
     assert got == ["blue", "red"]
+
+
+def test_get_spark_leaves_a_live_session_as_it_is(spark):
+    # the CLI calls get_spark() in its caller's process: a live session
+    # keeps the shuffle width and time zone its owner set
+    keys = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.session.timeZone": "America/New_York",
+    }
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        got = get_spark(app_name="b")
+        assert {k: got.conf.get(k) for k in keys} == keys
+        assert {k: spark.conf.get(k) for k in keys} == keys
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def test_get_spark_builds_a_new_session_with_its_confs():
+    # after stop() there is no live session, so the next get_spark()
+    # builds one with the confs it was asked for (a subprocess: the
+    # suite's own session must stay up)
+    script = (
+        "from stream_processing_spark.session import get_spark\n"
+        "s = get_spark(app_name='a', master='local[1]', shuffle_partitions=3)\n"
+        "s.conf.set('spark.sql.session.timeZone', 'America/New_York')\n"
+        "s.stop()\n"
+        "s = get_spark(app_name='b', master='local[1]', shuffle_partitions=5)\n"
+        "print('CONFS', s.conf.get('spark.sql.shuffle.partitions'),"
+        " s.conf.get('spark.sql.session.timeZone'))\n"
+        "s.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "CONFS 5 UTC" in r.stdout.splitlines(), r.stdout

@@ -18,6 +18,7 @@ from stream_processing_spark.streaming.ingest_dedup import (
     StreamingIngestDedup,
     band_buckets,
 )
+from stream_processing_spark.streaming.job import await_drained
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,8 +50,7 @@ def _drain(spark, src_dir, sink, ck):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    assert not q.isActive
+    await_drained(q, 300)
 
 
 def test_streaming_ingest_matches_batch_lsh(spark, tmp_path):

@@ -305,6 +305,34 @@ def test_timers_go_through_noop_walls():
     )
 
 
+def test_session_confs_set_in_two_places():
+    # who may set session confs: start_with_confs pins them around one
+    # query start and restores them, events_ts_layout pins what every
+    # events consumer needs; nothing else changes a caller's session
+    allowed = {("streaming/job.py", "start_with_confs"), ("catalog.py", "events_ts_layout")}
+    root = pathlib.Path(stream_processing_spark.__file__).parent
+    direct = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        todo = [ast.parse(path.read_text(), rel)]
+        while todo:
+            node = todo.pop()
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) in allowed:
+                continue
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and getattr(node.func.value, "attr", None) == "conf"
+            ):
+                direct.append((rel, node.lineno))
+            todo.extend(ast.iter_child_nodes(node))
+    assert not direct, (
+        "set session confs through streaming.job.start_with_confs: "
+        + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
+    )
+
+
 def test_hashes_go_through_keys():
     # one spelling for hash keys: functions/keys.py decides between an
     # equality-only key (eq_key) and an oracle-mirrored value hash

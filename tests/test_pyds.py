@@ -1,8 +1,8 @@
-"""Python Data Source connector (sources/pyds.py): byte-range-split
-batch reads with pushed-down substring filters, single-file tail
-streaming with checkpointed byte offsets, and the idempotent key:value
-stream sink — the reference's source/sink contracts (S1/ST7/S2) as a
-first-class Spark 4 connector."""
+"""Python Data Source connector (sources/pyds.py): single-file and
+fleet tail streaming with checkpointed byte offsets and byte-range
+catch-up splits — the reference's tail-read source (ST7) as a
+first-class Spark 4 connector, drained through StreamJob's exactly-once
+key:value sink."""
 
 from __future__ import annotations
 
@@ -12,12 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_processing_spark.sources.pyds import (
-    LineTailDataSource,
     _iter_lines,
-    _LineBatchReader,
     _snap_to_line_end,
     _split_ranges,
 )
+from stream_processing_spark.streaming import StreamJob
 
 
 @pytest.fixture(scope="module")
@@ -43,75 +42,6 @@ def _manual_parse(path: str) -> list[tuple[int, str]]:
     return out
 
 
-def test_batch_read_matches_manual_parse_any_split(registered, tmp_path):
-    spark = registered
-    p = str(tmp_path / "f.txt")
-    lines = ["alpha", "", "β-unicode", "d" * 40, "tail-no-newline"]
-    with open(p, "w") as f:
-        f.write("\n".join(lines))  # no trailing newline
-    truth = _manual_parse(p)
-    assert [v for _, v in truth] == lines
-
-    for split in (7, 16, 1 << 20):  # splits cutting lines mid-byte
-        df = (
-            spark.read.format("linetail")
-            .option("path", p)
-            .option("split_bytes", split)
-            .load()
-        )
-        got = sorted((r.offset, r.value) for r in df.collect())
-        assert got == truth, (split, got)
-
-    # many partitions when the split is tiny
-    df = (
-        spark.read.format("linetail")
-        .option("path", p).option("split_bytes", 7).load()
-    )
-    assert df.rdd.getNumPartitions() > 1
-
-
-def test_batch_read_glob_multiple_files(registered, tmp_path):
-    spark = registered
-    for name, body in [("a.log", "x1\nx2\n"), ("b.log", "y1\n")]:
-        with open(tmp_path / name, "w") as f:
-            f.write(body)
-    df = (
-        spark.read.format("linetail")
-        .option("path", str(tmp_path / "*.log")).load()
-    )
-    got = sorted((os.path.basename(r.file), r.offset, r.value)
-                 for r in df.collect())
-    assert got == [("a.log", 0, "x1"), ("a.log", 3, "x2"), ("b.log", 0, "y1")]
-
-
-def test_pushdown_substring_filter_applied_in_scan(registered, tmp_path):
-    spark = registered
-    p = str(tmp_path / "g.txt")
-    with open(p, "w") as f:
-        f.write("keep needle here\ndrop this\nneedle again\n")
-    df = (
-        spark.read.format("linetail").option("path", p).load()
-        .filter(F.col("value").contains("needle"))
-    )
-    assert sorted(r.value for r in df.collect()) == [
-        "keep needle here", "needle again",
-    ]
-    # unit-level: the reader consumes the StringContains filter (returns
-    # nothing unhandled) and applies it inside the raw scan
-    from pyspark.sql.datasource import EqualTo, StringContains
-
-    r = _LineBatchReader({"path": p, "split_bytes": "1048576"})
-    unhandled = list(
-        r.pushFilters([
-            StringContains(("value",), "needle"),
-            EqualTo(("offset",), 0),
-        ])
-    )
-    assert [type(f).__name__ for f in unhandled] == ["EqualTo"]
-    vals = [v for _, v in _iter_lines(p, 0, os.path.getsize(p), r._needles)]
-    assert vals == ["keep needle here", "needle again"]
-
-
 def test_split_helpers_cover_and_partition_exactly():
     assert _split_ranges(0, 10) == []
     assert _split_ranges(10, 4) == [(0, 4), (4, 8), (8, 10)]
@@ -128,7 +58,7 @@ def test_split_helpers_cover_and_partition_exactly():
     for split in range(1, len(body) + 2):
         got = sorted(
             itertools.chain.from_iterable(
-                _iter_lines(path, s, e, [])
+                _iter_lines(path, s, e)
                 for s, e in _split_ranges(len(body), split)
             )
         )
@@ -151,33 +81,15 @@ def test_snap_to_line_end(tmp_path):
 
 
 def _drain(spark, src_path, outd, ck):
-    """Drain the tail source through the kv stream sink (the memory
-    sink cannot recover from a checkpoint, ours can) and return the
-    CUMULATIVE (offset, value) pairs across all committed batches."""
-    q = (
-        spark.readStream.format("linetail")
-        .option("path", src_path)
-        .load()
-        .select(
-            F.col("offset").cast("string").alias("key"),
-            F.col("value"),
-        )
-        .writeStream.format("linetail")
-        .option("path", outd)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
+    """Drain the tail source through StreamJob's key:value sink and
+    return the CUMULATIVE (offset, value) pairs across all committed
+    batches."""
+    job = StreamJob(spark, src_path, outd, ops=[], source="tail", checkpoint_dir=ck)
+    job.run_to_completion(timeout_sec=120)
     out = []
-    for fn in sorted(os.listdir(outd)):
-        if not fn.startswith("batch-"):
-            continue
-        with open(os.path.join(outd, fn)) as f:
-            for ln in f.read().splitlines():
-                k, v = ln.split(":", 1)
-                out.append((int(k), v))
+    for r in job.read_output().collect():
+        _, off, v = r.value.split(":", 2)
+        out.append((int(off), v))
     return sorted(out)
 
 
@@ -227,41 +139,6 @@ def test_stream_backlog_fans_out_to_parallel_splits(registered, tmp_path):
     assert got == lines
 
 
-def test_stream_writer_kv_lines_idempotent_names(registered, tmp_path):
-    spark = registered
-    src = str(tmp_path / "in.log")
-    outd = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    with open(src, "w") as f:
-        f.write("a\nbb\nccc\n")
-    q = (
-        spark.readStream.format("linetail")
-        .option("path", src)
-        .load()
-        .select(
-            F.col("offset").cast("string").alias("key"),
-            F.length("value").cast("string").alias("value"),
-        )
-        .writeStream.format("linetail")
-        .option("path", outd)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    files = sorted(os.listdir(outd))
-    assert files and all(f.startswith("batch-") for f in files), files
-    body = []
-    for fn in files:
-        with open(os.path.join(outd, fn)) as f:
-            body += [ln.strip() for ln in f if ln.strip()]
-    assert sorted(body) == ["0:1", "2:2", "5:3"]
-    # batch-deterministic names: a replayed batch would os.replace the
-    # same file instead of appending a duplicate
-    assert all(f.split("-")[1].isdigit() for f in files)
-
-
 def test_stream_shrunken_file_raises_clear_error(registered, tmp_path):
     spark = registered
     src = str(tmp_path / "shrink.log")
@@ -302,7 +179,7 @@ def test_split_property_random_bodies():
 
             got = sorted(
                 itertools.chain.from_iterable(
-                    _iter_lines(path, s, e, [])
+                    _iter_lines(path, s, e)
                     for s, e in _split_ranges(len(body), split)
                 )
             )
@@ -331,8 +208,6 @@ def test_streamjob_on_linetail_source(registered, tmp_path):
     envelope, exactly-once key:value output) runs directly on the
     linetail connector: one growing file in, byte-offset record ids,
     restart picks up only the appended delta."""
-    from stream_processing_spark.streaming import StreamJob
-
     spark = registered
     src = str(tmp_path / "app.log")
     outd = str(tmp_path / "out")
@@ -379,31 +254,14 @@ def test_stream_reader_rejects_typos_allows_globs(registered, tmp_path):
 
 
 def _drain_fleet(spark, pattern, outd, ck):
-    q = (
-        spark.readStream.format("linetail")
-        .option("path", pattern)
-        .load()
-        .select(
-            F.concat_ws(
-                ":",
-                F.regexp_extract("file", r"([^/]+)$", 1),
-                F.col("offset").cast("string"),
-            ).alias("key"),
-            F.col("value"),
-        )
-        .writeStream.format("linetail")
-        .option("path", outd)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
+    """Drain a fleet glob like ``_drain``; lines read
+    ``<basename>:<offset>:<value>``."""
+    job = StreamJob(spark, pattern, outd, ops=[], source="tail", checkpoint_dir=ck)
+    job.run_to_completion(timeout_sec=120)
     out = []
-    for fn in sorted(os.listdir(outd)):
-        if fn.startswith("batch-"):
-            with open(os.path.join(outd, fn)) as f:
-                out += [ln for ln in f.read().splitlines() if ln]
+    for r in job.read_output().collect():
+        f, off, v = r.value.split(":", 2)
+        out.append(f"{os.path.basename(f)}:{off}:{v}")
     return sorted(out)
 
 
@@ -473,8 +331,6 @@ def test_streaming_grep_over_fleet(registered, tmp_path):
 
 
 def test_streamjob_tail_rejects_file_trigger_option(registered, tmp_path):
-    from stream_processing_spark.streaming import StreamJob
-
     src = str(tmp_path / "a.log")
     with open(src, "w") as f:
         f.write("x\n")
@@ -486,25 +342,9 @@ def test_streamjob_tail_rejects_file_trigger_option(registered, tmp_path):
         job.run_to_completion()
 
 
-def test_stream_writer_sweeps_spool(registered, tmp_path):
-    # after a committed batch the sink dir holds only batch-* output —
-    # the per-query spool (where crashed tasks would leak temp files)
-    # is swept on commit
-    spark = registered
-    src = str(tmp_path / "in.log")
-    outd = str(tmp_path / "out")
-    with open(src, "w") as f:
-        f.write("a\nb\n")
-    _drain(spark, src, outd, str(tmp_path / "ck"))
-    leftovers = [f for f in os.listdir(outd) if not f.startswith("batch-")]
-    assert leftovers == [], leftovers
-
-
 def test_streamjob_on_fleet_tail(registered, tmp_path):
     """RainStorm ops over the whole fleet of growing logs: StreamJob
     tail mode accepts the glob, record ids are file:offset."""
-    from stream_processing_spark.streaming import StreamJob
-
     spark = registered
     for i, body in [(1, "stop,red"), (2, "go,green"), (3, "stop,blue")]:
         with open(tmp_path / f"m{i}.log", "w") as f:
@@ -554,18 +394,6 @@ def test_stream_fleet_ignores_directories(registered, tmp_path):
         str(tmp_path / "out"), str(tmp_path / "ck"),
     )
     assert got == ["m1.log:0:x"]
-
-
-def test_batch_read_missing_path_raises(registered, tmp_path):
-    """ADVICE r5: a typo'd batch path must fail loudly, mirroring the
-    stream reader — not return a healthy-looking empty scan."""
-    import pytest
-
-    spark = registered
-    for bad in (str(tmp_path / "nope.txt"), str(tmp_path / "nope*.log")):
-        df = spark.read.format("linetail").option("path", bad).load()
-        with pytest.raises(Exception, match="matches no files"):
-            df.collect()
 
 
 def test_stream_tail_byte_bounded_triggers(registered, tmp_path):
@@ -647,8 +475,6 @@ def test_cap_advance_oversized_line_liveness(tmp_path):
 
 
 def test_streamjob_files_rejects_byte_trigger_option(registered, tmp_path):
-    from stream_processing_spark.streaming import StreamJob
-
     d = tmp_path / "ind"
     d.mkdir()
     job = StreamJob(
@@ -662,8 +488,6 @@ def test_streamjob_files_rejects_byte_trigger_option(registered, tmp_path):
 def test_streamjob_tail_rejects_source_file_cap(registered, tmp_path):
     """Review r6: max_source_file_bytes silently ignored in tail mode
     — now raises symmetrically with the other cross-option guards."""
-    from stream_processing_spark.streaming import StreamJob
-
     src = str(tmp_path / "a.log")
     with open(src, "w") as f:
         f.write("x\n")

@@ -31,9 +31,9 @@ def _split_kv(df):
 
 
 def _count_ops():
-    from stream_processing_spark.streaming.stateful import running_count
+    from stream_processing_spark.operators import count_by
 
-    return [_split_kv, lambda df: running_count(df)]
+    return [_split_kv, lambda df: count_by(df, "key")]
 
 
 def test_state_reader_matches_emitted_totals_and_continues(spark, tmp_path):

@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_spark.operators import count_by, filter_pattern, select_columns
 from stream_processing_spark.streaming import StreamJob
-from stream_processing_spark.streaming.stateful import (
-    running_count,
-    stateful_running_count,
-)
+from stream_processing_spark.streaming.stateful import stateful_running_count
 
 
 def _write_input(d: str, name: str, lines: list[str]) -> None:
@@ -94,8 +91,8 @@ def test_stateful_update_mode_counts(spark, tmp_path):
     ind, outd = str(tmp_path / "in"), str(tmp_path / "out")
     _write_input(ind, "batch1.csv", ["x,a", "y,b", "x,c"])
     ops = [
-        lambda df: select_columns(df, 0, names=["cat"]),
-        lambda df: running_count(df, "cat").withColumnRenamed("cnt", "value"),
+        lambda df: select_columns(df, 0, names=["key"]),
+        lambda df: count_by(df, "key", alias="value"),
     ]
     job = StreamJob(spark, ind, outd, ops=ops, stateful=True)
     job.run_to_completion()
@@ -138,8 +135,8 @@ def test_continuous_processing_time_trigger(spark, tmp_path):
     ind, outd = str(tmp_path / "in"), str(tmp_path / "out")
     _write_input(ind, "live1.csv", ["x,a", "y,b", "x,c"])
     ops = [
-        lambda df: select_columns(df, 0, names=["cat"]),
-        lambda df: running_count(df, "cat").withColumnRenamed("cnt", "value"),
+        lambda df: select_columns(df, 0, names=["key"]),
+        lambda df: count_by(df, "key", alias="value"),
     ]
     job = StreamJob(spark, ind, outd, ops=ops, stateful=True)
     q = job.start(available_now=False, processing_time="500 milliseconds")

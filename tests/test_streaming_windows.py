@@ -8,6 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from stream_processing_spark.streaming import windows as W
+from stream_processing_spark.streaming.job import await_drained
 
 
 def _write_events(d: str, name: str, rows: list[tuple[str, str, str]]) -> None:
@@ -42,7 +43,7 @@ def _drain(df, outname, tmp_path, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_drained(q, 120)
 
 
 def test_tumbling_counts_match_batch(spark, tmp_path):

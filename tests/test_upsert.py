@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from stream_processing_spark.streaming.job import await_drained
 from stream_processing_spark.streaming.upsert import UpsertTable
 
 
@@ -45,8 +46,7 @@ def _drain(spark, ind, table, ck):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    assert not q.isActive
+    await_drained(q, 120)
 
 
 def test_upsert_stream_merges_and_survives_replay(spark, tmp_path):
