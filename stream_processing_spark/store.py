@@ -16,8 +16,11 @@ durability belong to the storage layer (HDFS/S3), so what remains as
                     (merge_file file_system.py:286-365 makes replicas
                     byte-identical; our invariant is multiset + per-writer
                     order equality)
-- **get**         — versioned read with client-side cache: unchanged
-                    version ⇒ no re-read (shared.py:36-81, ≤500 entries)
+- **get**         — versioned read with client-side cache: `get_lines`
+                    keeps materialized lines per (dataset id, version),
+                    so an unchanged version ⇒ no re-read and no Spark
+                    job (shared.py:36-81, ≤500 entries); `get` is the
+                    lazy frame over the current parts
 - **ls / store**  — metadata listing (bin/ls.py, bin/store.py)
 
 Order is carried AS DATA — (writer, wseq, idx) columns — not as file
@@ -32,6 +35,7 @@ single-filesystem equivalent.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import threading
@@ -57,6 +61,9 @@ LINE_SCHEMA = StructType(
 )
 
 _CACHE_CAP = 500  # reference: bin/get_file.py:41-50 caps the client cache
+# total line characters the read cache holds; a dataset larger than this
+# is returned but never cached
+_CACHE_CHARS = 1 << 25
 
 
 class DatasetExistsError(Exception):
@@ -78,7 +85,10 @@ class Store:
         # one merge at a time per dataset: a second merge must not treat
         # a live peer's __merge_tmp as a stale crash leftover
         self._merge_locks: dict[str, threading.Lock] = {}
-        self._cache: dict[str, tuple[int, DataFrame]] = {}
+        # name -> ((dataset id, version), lines, line characters);
+        # insertion order is age
+        self._cache: dict[str, tuple[tuple, tuple[str, ...], int]] = {}
+        self._cache_chars = 0
 
     # ---------------------------------------------------------- paths
     def _dir(self, name: str) -> str:
@@ -114,7 +124,9 @@ class Store:
             if os.path.exists(d):
                 raise DatasetExistsError(name)
             os.makedirs(d)
-            self._write_meta(name, {"version": 0, "wseq": {}})
+            # the id tells a re-created dataset from the deleted one it
+            # replaces: both reach the same version numbers
+            self._write_meta(name, {"id": uuid.uuid4().hex, "version": 0, "wseq": {}})
         if lines is not None:
             self.append(name, lines, writer=writer)
         else:
@@ -257,25 +269,47 @@ class Store:
         return self.spark.read.schema(LINE_SCHEMA).parquet(*parts)
 
     def get(self, name: str) -> DataFrame:
-        """Versioned read: if the version is unchanged since the last
-        get, return the cached DataFrame (reference S7 semantics —
-        'version unchanged ⇒ no transfer')."""
-        version = self.version(name)
-        hit = self._cache.get(name)
-        if hit is not None and hit[0] == version:
-            return hit[1]
-        df = self._read_all(name)
-        if len(self._cache) >= _CACHE_CAP:
-            self._cache.pop(next(iter(self._cache)))
-        self._cache[name] = (version, df)
-        return df
+        """The dataset as a lazy frame over its current parts."""
+        return self._read_all(name)
 
     def get_lines(self, name: str) -> list[str]:
-        """Materialized lines in the canonical (writer, wseq, idx) order."""
-        return [
-            r.value
-            for r in self.get(name).orderBy("writer", "wseq", "idx").collect()
-        ]
+        """Materialized lines in the canonical (writer, wseq, idx) order.
+
+        Versioned read (reference S7 semantics — 'version unchanged ⇒ no
+        transfer'): while the dataset's id and version are unchanged the
+        cached lines are returned and no Spark job runs. The key is read
+        BEFORE the scan, so a scan racing a write can only label newer
+        lines with an older key — one extra miss, never a stale read.
+        Spark orders strings by UTF-8 bytes and Python by code points;
+        the two orders agree, so the driver-side sort is the canonical one.
+        """
+        meta = self._read_meta(name)
+        key = (meta.get("id"), meta["version"])
+        hit = self._cache.get(name)
+        if hit is not None and hit[0] == key:
+            return list(hit[1])
+        rows = self._read_all(name).collect()
+        rows.sort(key=operator.itemgetter(0, 1, 2))  # (writer, wseq, idx)
+        lines = tuple(r.value for r in rows)
+        self._remember(name, key, lines)
+        return list(lines)
+
+    def _remember(self, name: str, key: tuple, lines: tuple[str, ...]) -> None:
+        size = sum(len(ln) for ln in lines if ln)
+        with self._lock:
+            self._forget(name)
+            if size > _CACHE_CHARS:
+                return
+            self._cache[name] = (key, lines, size)
+            self._cache_chars += size
+            while len(self._cache) > _CACHE_CAP or self._cache_chars > _CACHE_CHARS:
+                self._forget(next(iter(self._cache)))
+
+    def _forget(self, name: str) -> None:
+        """Drop a cache entry; the caller holds ``_lock``."""
+        entry = self._cache.pop(name, None)
+        if entry is not None:
+            self._cache_chars -= entry[2]
 
     def version(self, name: str) -> int:
         return self._read_meta(name)["version"]
@@ -311,4 +345,4 @@ class Store:
             if not os.path.isdir(d):
                 raise DatasetNotFoundError(name)
             shutil.rmtree(d)
-            self._cache.pop(name, None)
+            self._forget(name)

@@ -4,8 +4,11 @@ fs_test.sh scenarios."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
+from stream_processing_spark import store as store_mod
 from stream_processing_spark.store import (
     DatasetExistsError,
     DatasetNotFoundError,
@@ -61,16 +64,152 @@ def test_multiappend_concurrent(store):
     assert len(store.get_lines("f4")) == 80
 
 
-def test_versioned_get_caching(store):
+def _jobs(spark, read):
+    """Run `read()` under its own job group; return (result, Spark jobs run)."""
+    sc, gid = spark.sparkContext, f"test-store-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "store read job count")
+    try:
+        out = read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_versioned_get_caching(store, spark):
+    # reference S7: version unchanged => no transfer, so no Spark job
     store.create("f5", ["v0"])
-    v1 = store.version("f5")
-    df_a = store.get("f5")
-    df_b = store.get("f5")
-    assert df_a is df_b  # unchanged version ⇒ cached object
+    assert _jobs(spark, lambda: store.get_lines("f5"))[1] >= 1
+    assert _jobs(spark, lambda: store.get_lines("f5")) == (["v0"], 0)
     store.append("f5", ["v1"])
-    assert store.version("f5") > v1
-    df_c = store.get("f5")
-    assert df_c is not df_a
+    assert store.get_lines("f5") == ["v0", "v1"]
+    store.merge("f5")
+    assert store.get_lines("f5") == ["v0", "v1"]
+    assert _jobs(spark, lambda: store.get_lines("f5")) == (["v0", "v1"], 0)
+    store.delete("f5")
+    store.create("f5", ["new"])
+    assert store.get_lines("f5") == ["new"]
+
+
+def test_recreated_dataset_is_not_served_from_cache(spark, tmp_path):
+    # create + append reach version 1 on every dataset, so a name deleted
+    # and re-created by another client is back at the version a cache
+    # holds: the dataset id, not the version, tells them apart
+    root = str(tmp_path / "store")
+    a, b = Store(spark, root), Store(spark, root)
+    a.create("r1", ["old"])
+    assert a.get_lines("r1") == ["old"]
+    b.delete("r1")
+    b.create("r1", ["other"])
+    assert b.version("r1") == a.version("r1")
+    assert a.get_lines("r1") == ["other"]
+
+
+def test_get_lines_result_is_a_copy(store):
+    store.create("c1", ["a", "b"])
+    first = store.get_lines("c1")
+    first.append("mine")
+    first[0] = "changed"
+    assert store.get_lines("c1") == ["a", "b"]
+
+
+def test_read_cache_bounded_by_characters(store, monkeypatch):
+    monkeypatch.setattr(store_mod, "_CACHE_CHARS", 10)
+    store.create("s1", ["aaaa"])  # 4 characters
+    store.create("s2", ["bbbb"])
+    store.create("big", ["x" * 11])
+    store.get_lines("s1")
+    store.get_lines("s2")
+    assert list(store._cache) == ["s1", "s2"]
+    # larger than the bound: returned, never cached, evicts nothing
+    assert store.get_lines("big") == ["x" * 11]
+    assert list(store._cache) == ["s1", "s2"]
+    # a refreshed entry moves to the newest position ...
+    store.append("s1", ["cc"])
+    assert store.get_lines("s1") == ["aaaa", "cc"]
+    assert list(store._cache) == ["s2", "s1"]
+    # ... so the next entry that overflows the bound evicts s2 first
+    store.create("s3", ["dd"])
+    store.get_lines("s3")
+    assert list(store._cache) == ["s1", "s3"]
+    assert store._cache_chars == 8
+    store.delete("s1")
+    assert list(store._cache) == ["s3"] and store._cache_chars == 2
+
+
+def test_read_cache_bounded_by_count(store, monkeypatch):
+    monkeypatch.setattr(store_mod, "_CACHE_CAP", 2)
+    for n in ("n1", "n2", "n3"):
+        store.create(n, [n])
+        store.get_lines(n)
+    assert list(store._cache) == ["n2", "n3"]
+    assert store.get_lines("n1") == ["n1"]
+    assert list(store._cache) == ["n3", "n1"]
+
+
+def test_read_cache_concurrent_readers_and_writers(store):
+    # more threads than cores reading and appending at once: the cache's
+    # character total must equal its entries' sizes (a lost update breaks
+    # it), and every dataset's last read holds all of its appends
+    import sys
+    import threading
+
+    names = [f"t{i}" for i in range(3)]
+    for n in names:
+        store.create(n, [f"{n}-base"])
+    errs: list[Exception] = []
+
+    def reader(n: str) -> None:
+        try:
+            for _ in range(4):
+                store.get_lines(n)
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    def writer(n: str) -> None:
+        try:
+            for k in range(2):
+                store.append(n, [f"{n}-{k}"])
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    threads = [threading.Thread(target=reader, args=(n,)) for n in names * 2]
+    threads += [threading.Thread(target=writer, args=(n,)) for n in names]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errs
+    for n in names:
+        assert store.get_lines(n) == [f"{n}-base", f"{n}-0", f"{n}-1"]
+    assert store._cache_chars == sum(e[2] for e in store._cache.values())
+
+
+def test_get_lines_order_matches_spark_order(store):
+    # the cache sorts on the driver (Python compares code points) where
+    # the old read sorted in Spark (UTF-8 bytes): the two orders agree
+    writers = ["Z", "a", "é", "😀", "ab", "Ä"]
+    store.create("u1", ["first"], writer="😀")
+    for rnd in range(2):
+        store.multiappend(
+            "u1", {w: [f"{w}-{rnd}-{i}" for i in range(3)] for w in writers}
+        )
+
+    def spark_order():
+        rows = store.get("u1").orderBy("writer", "wseq", "idx").collect()
+        return [r.value for r in rows]
+
+    before = store.get_lines("u1")
+    assert before == spark_order()
+    assert before[:4] == ["Z-0-0", "Z-0-1", "Z-0-2", "Z-1-0"]
+    assert before[-7:] == ["first"] + [f"😀-{r}-{i}" for r in range(2) for i in range(3)]
+    store.merge("u1")
+    assert store.get_lines("u1") == spark_order() == before
 
 
 def test_ls_store_delete(store):
