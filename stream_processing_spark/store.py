@@ -9,9 +9,13 @@ durability belong to the storage layer (HDFS/S3), so what remains as
 - **create**      — fails if the dataset exists (C protocol,
                     file_system.py:119-145)
 - **append**      — adds content; appends from one writer stay ordered
-                    (shared.py:253-296 routes a client to one replica)
+                    (shared.py:253-296 routes a client to one replica).
+                    Lines already on the driver are written as one
+                    parquet file with pyarrow, no Spark job — a local
+                    write, like the reference's MemTable (mem_table.py);
+                    `append_df` (the scale path) writes with Spark
 - **multiappend** — concurrent appends from many writers
-                    (file_system.py:247-253)
+                    (file_system.py:247-253), one pyarrow part each
 - **merge**       — compacts parts; MUST NOT change query results
                     (merge_file file_system.py:286-365 makes replicas
                     byte-identical; our invariant is multiset + per-writer
@@ -19,8 +23,10 @@ durability belong to the storage layer (HDFS/S3), so what remains as
 - **get**         — versioned read with client-side cache: `get_lines`
                     keeps materialized lines per (dataset id, version),
                     so an unchanged version ⇒ no re-read and no Spark
-                    job (shared.py:36-81, ≤500 entries); `get` is the
-                    lazy frame over the current parts
+                    job (shared.py:36-81, ≤500 entries); a miss that
+                    a merge's swap cuts short retries at the merged
+                    version; `get` is the lazy frame over the current
+                    parts
 - **ls / store**  — metadata listing (bin/ls.py, bin/store.py)
 
 Order is carried AS DATA — (writer, wseq, idx) columns — not as file
@@ -41,7 +47,12 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,6 +70,20 @@ LINE_SCHEMA = StructType(
         StructField("value", StringType(), True),
     ]
 )
+
+# LINE_SCHEMA as pyarrow writes it. Spark reads every file column back
+# as nullable; the files themselves keep writer/wseq/idx non-null.
+_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("writer", pa.string(), nullable=False),
+        pa.field("wseq", pa.int64(), nullable=False),
+        pa.field("idx", pa.int64(), nullable=False),
+        pa.field("value", pa.string(), nullable=True),
+    ]
+)
+
+# times a read retries after a merge swapped the dataset under it
+_READ_RETRIES = 3
 
 _CACHE_CAP = 500  # reference: bin/get_file.py:41-50 caps the client cache
 # total line characters the read cache holds; a dataset larger than this
@@ -135,49 +160,64 @@ class Store:
     def append(self, name: str, lines: list[str], writer: str = "w0") -> None:
         """Append driver-provided lines. Per-writer order is recorded in
         (wseq, idx); appends from different writers are unordered
-        relative to each other — exactly the reference's contract."""
-        with self._lock:
-            meta = self._read_meta(name)
-            wseq = meta["wseq"].get(writer, 0)
-            meta["wseq"][writer] = wseq + 1
-            self._write_meta(name, meta)
-        rows = [(writer, wseq, i, ln) for i, ln in enumerate(lines)]
-        df = self.spark.createDataFrame(rows, LINE_SCHEMA)
-        self._write_part(name, df)
+        relative to each other — exactly the reference's contract.
+        The lines are on the driver already, so they are written as one
+        parquet file with pyarrow: no Spark job."""
+        wseq = self._next_wseq(name, writer)
+        n = len(lines)
+        table = pa.table(
+            {"writer": [writer] * n, "wseq": [wseq] * n, "idx": range(n), "value": lines},
+            schema=_ARROW_SCHEMA,
+        )
+
+        def write(stage: str) -> None:
+            os.makedirs(stage)
+            pq.write_table(table, os.path.join(stage, "part-0.parquet"))
+
+        self._publish_part(name, write)
         self._bump(name)
 
     def append_df(self, name: str, df: DataFrame, writer: str = "wdf") -> None:
         """Append a whole DataFrame with a `value` column — the scale
         path (no driver materialization)."""
-        with self._lock:
-            meta = self._read_meta(name)
-            wseq = meta["wseq"].get(writer, 0)
-            meta["wseq"][writer] = wseq + 1
-            self._write_meta(name, meta)
+        wseq = self._next_wseq(name, writer)
         out = df.select(
             F.lit(writer).alias("writer"),
             F.lit(wseq).cast("long").alias("wseq"),
             F.monotonically_increasing_id().alias("idx"),
             F.col("value").cast("string"),
         )
-        self._write_part(name, out)
+        self._publish_part(name, lambda stage: out.write.mode("errorifexists").parquet(stage))
         self._bump(name)
 
-    def _write_part(self, name: str, df: DataFrame) -> None:
+    def _next_wseq(self, name: str, writer: str) -> int:
+        with self._lock:
+            meta = self._read_meta(name)
+            wseq = meta["wseq"].get(writer, 0)
+            meta["wseq"][writer] = wseq + 1
+            self._write_meta(name, meta)
+        return wseq
+
+    def _publish_part(self, name: str, write: Callable[[str], None]) -> None:
         # each append is its own parquet sub-directory: append never
         # rewrites existing bytes (the MemTable analogue), merge compacts.
-        # The Spark write goes to a STAGING path outside the dataset dir
-        # and is published with one os.replace under the lock — a merge
+        # `write` fills a STAGING directory outside the dataset dir, which
+        # is published with one os.replace under the lock — a merge
         # running concurrently can therefore never observe (and trash) a
-        # half-written part: parts appear in the dataset atomically.
+        # half-written part: parts appear in the dataset atomically. A
+        # write or publish that fails leaves no staging directory behind.
         part = f"part-{time.time_ns()}-{uuid.uuid4().hex[:8]}"
         stage = os.path.join(self.root, ".staging", part)
-        df.write.mode("errorifexists").parquet(stage)
-        with self._lock:
-            d = self._dir(name)
-            if not os.path.isdir(d):
-                raise DatasetNotFoundError(name)
-            os.replace(stage, os.path.join(d, part))
+        try:
+            write(stage)
+            with self._lock:
+                d = self._dir(name)
+                if not os.path.isdir(d):
+                    raise DatasetNotFoundError(name)
+                os.replace(stage, os.path.join(d, part))
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
 
     def multiappend(self, name: str, payloads: dict[str, list[str]]) -> None:
         """Concurrent appends from many writers (reference protocol Q):
@@ -263,10 +303,19 @@ class Store:
         d = self._dir(name)
         if not os.path.isdir(d):
             raise DatasetNotFoundError(name)
-        parts = [os.path.join(d, p) for p in os.listdir(d) if p.startswith("part-")]
+        parts = [p for p in os.listdir(d) if p.startswith("part-")]
         if not parts:
             return self.spark.createDataFrame([], LINE_SCHEMA)
-        return self.spark.read.schema(LINE_SCHEMA).parquet(*parts)
+        df = self.spark.read.schema(LINE_SCHEMA).parquet(*[os.path.join(d, p) for p in parts])
+        # Spark lists a path that vanishes after its existence check as
+        # empty, without an error: a part that a merge's swap moves away
+        # in that instant would silently drop out of the read. Every part
+        # holds at least one file, so each must show among the input files.
+        listed = {f.rsplit("/", 2)[-2] for f in df.inputFiles()}
+        missing = [p for p in parts if p not in listed]
+        if missing:
+            raise FileNotFoundError(os.path.join(d, missing[0]))
+        return df
 
     def get(self, name: str) -> DataFrame:
         """The dataset as a lazy frame over its current parts."""
@@ -282,17 +331,42 @@ class Store:
         lines with an older key — one extra miss, never a stale read.
         Spark orders strings by UTF-8 bytes and Python by code points;
         the two orders agree, so the driver-side sort is the canonical one.
+        A merge that swaps the dataset during a miss trashes the parts the
+        scan listed; the scan then fails, and is retried at the key the
+        merge published (a failure at an unmoved key is raised).
         """
-        meta = self._read_meta(name)
-        key = (meta.get("id"), meta["version"])
-        hit = self._cache.get(name)
-        if hit is not None and hit[0] == key:
-            return list(hit[1])
-        rows = self._read_all(name).collect()
+        key = self._key(name)
+        for attempt in range(_READ_RETRIES + 1):
+            hit = self._cache.get(name)
+            if hit is not None and hit[0] == key:
+                return list(hit[1])
+            try:
+                rows = self._read_all(name).collect()
+                break
+            except (OSError, DatasetNotFoundError, PySparkException, Py4JJavaError):
+                moved = self._key(name)
+                if moved == key or attempt == _READ_RETRIES:
+                    raise
+                key = moved
         rows.sort(key=operator.itemgetter(0, 1, 2))  # (writer, wseq, idx)
         lines = tuple(r.value for r in rows)
         self._remember(name, key, lines)
         return list(lines)
+
+    def _key(self, name: str) -> tuple:
+        """The read cache's key for `name`: (dataset id, version). Between
+        merge's two renames the dataset has no _meta.json; a read landing
+        there waits for the swap instead of reporting the dataset gone."""
+        for attempt in range(_READ_RETRIES + 1):
+            try:
+                meta = self._read_meta(name)
+                return (meta.get("id"), meta["version"])
+            except DatasetNotFoundError:
+                d = self._dir(name)
+                swapping = os.path.isdir(d + ".__merge_tmp") or os.path.isdir(d)
+                if attempt == _READ_RETRIES or not swapping:
+                    raise
+                time.sleep(0.005)
 
     def _remember(self, name: str, key: tuple, lines: tuple[str, ...]) -> None:
         size = sum(len(ln) for ln in lines if ln)

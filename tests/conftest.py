@@ -84,6 +84,7 @@ GATE_MODULES = {
     "test_grep_differential",
     "test_timing",
     "test_catalog",
+    "test_store",
 }
 
 

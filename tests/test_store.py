@@ -4,12 +4,16 @@ fs_test.sh scenarios."""
 
 from __future__ import annotations
 
+import os
+import threading
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 
 from stream_processing_spark import store as store_mod
 from stream_processing_spark.store import (
+    LINE_SCHEMA,
     DatasetExistsError,
     DatasetNotFoundError,
     Store,
@@ -152,7 +156,6 @@ def test_read_cache_concurrent_readers_and_writers(store):
     # character total must equal its entries' sizes (a lost update breaks
     # it), and every dataset's last read holds all of its appends
     import sys
-    import threading
 
     names = [f"t{i}" for i in range(3)]
     for n in names:
@@ -190,15 +193,18 @@ def test_read_cache_concurrent_readers_and_writers(store):
     assert store._cache_chars == sum(e[2] for e in store._cache.values())
 
 
-def test_get_lines_order_matches_spark_order(store):
+def test_get_lines_order_matches_spark_order(store, spark):
     # the cache sorts on the driver (Python compares code points) where
-    # the old read sorted in Spark (UTF-8 bytes): the two orders agree
+    # the old read sorted in Spark (UTF-8 bytes): the two orders agree.
+    # The parts mix pyarrow-written appends with one Spark-written
+    # append_df part.
     writers = ["Z", "a", "é", "😀", "ab", "Ä"]
     store.create("u1", ["first"], writer="😀")
     for rnd in range(2):
         store.multiappend(
             "u1", {w: [f"{w}-{rnd}-{i}" for i in range(3)] for w in writers}
         )
+    store.append_df("u1", spark.range(3).selectExpr("concat('df-', id) AS value"))
 
     def spark_order():
         rows = store.get("u1").orderBy("writer", "wseq", "idx").collect()
@@ -210,6 +216,106 @@ def test_get_lines_order_matches_spark_order(store):
     assert before[-7:] == ["first"] + [f"😀-{r}-{i}" for r in range(2) for i in range(3)]
     store.merge("u1")
     assert store.get_lines("u1") == spark_order() == before
+
+
+def test_driver_appends_run_no_spark_job(store, spark):
+    # lines already on the driver are written with pyarrow, not a job
+    assert _jobs(spark, lambda: store.create("p1", ["a"]))[1] == 0
+    assert _jobs(spark, lambda: store.append("p1", ["b"], writer="w1"))[1] == 0
+    assert store.get_lines("p1") == ["a", "b"]
+
+
+def test_pyarrow_parts_round_trip(store, spark):
+    # an empty append, a null line and non-ASCII lines read back as
+    # written, through Spark's reader (a fresh Store, so no cache) and
+    # after a merge rewrites them with Spark
+    lines = ["plain", None, "", "naïve", "日本語", "😀 emoji"]
+    store.create("rt", lines, writer="w0")
+    store.append("rt", [], writer="w0")
+    store.append("rt", ["tail"], writer="w1")
+    want = lines + ["tail"]
+    fresh = Store(spark, store.root)
+    assert fresh.get_lines("rt") == want
+    df = fresh.get("rt")
+    # Spark reads every file column back as nullable; the names and
+    # types are LINE_SCHEMA's, and the files keep the key columns non-null
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in LINE_SCHEMA
+    ]
+    part = os.path.join(store.root, "rt", fresh.ls("rt")["parts"][0])
+    schema = pq.read_schema(os.path.join(part, os.listdir(part)[0]))
+    assert [(f.name, f.nullable) for f in schema] == [
+        (f.name, f.nullable) for f in LINE_SCHEMA
+    ]
+    assert df.count() == len(want)
+    store.merge("rt")
+    assert Store(spark, store.root).get_lines("rt") == want
+
+
+def test_failed_write_leaves_no_staging_debris(store, monkeypatch):
+    store.create("fw", ["kept"])
+    version = store.version("fw")
+    staging = os.path.join(store.root, ".staging")
+
+    def broken(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(store_mod.pq, "write_table", broken)
+    with pytest.raises(OSError, match="disk full"):
+        store.append("fw", ["lost"])
+    monkeypatch.undo()
+    assert os.listdir(staging) == []
+    assert store.version("fw") == version
+    assert store.get_lines("fw") == ["kept"]
+
+    # the publish fails too when the dataset is deleted mid-write
+    real = pq.write_table
+    store.create("gone", ["x"])
+
+    def write_then_delete(*args, **kwargs):
+        real(*args, **kwargs)
+        store.delete("gone")
+
+    monkeypatch.setattr(store_mod.pq, "write_table", write_then_delete)
+    with pytest.raises(DatasetNotFoundError):
+        store.append("gone", ["y"])
+    assert os.listdir(staging) == []
+
+
+def test_cache_miss_survives_concurrent_merges(store, spark):
+    # every read goes through a fresh Store, so every read is a miss that
+    # scans the parts a merge's swap is about to trash
+    want = [f"line{i}" for i in range(50)]
+    store.create("mr", want[:25])
+    store.append("mr", want[25:])
+    done = threading.Event()
+    reads: list[list[str]] = []
+    errs: list[Exception] = []
+
+    def merger() -> None:
+        try:
+            for _ in range(25):
+                store.merge("mr")
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+        finally:
+            done.set()
+
+    def reader() -> None:
+        while not done.is_set():
+            try:
+                reads.append(Store(spark, store.root).get_lines("mr"))
+            except Exception as e:
+                errs.append(e)
+
+    threads = [threading.Thread(target=merger), threading.Thread(target=reader)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errs == []
+    assert reads and all(r == want for r in reads)
 
 
 def test_ls_store_delete(store):
@@ -238,8 +344,6 @@ def test_merge_concurrent_append_not_lost(store):
     # ADVICE r1: an append landing between merge's snapshot and its
     # directory swap must survive (late parts are moved into the merged
     # dir under the lock, and meta is re-read so wseq never rolls back)
-    import threading
-
     store.create("f6", [f"base{i}" for i in range(20)], writer="w0")
 
     done = threading.Event()
@@ -275,8 +379,6 @@ def test_merge_concurrent_append_not_lost(store):
 
 
 def test_merge_cleans_stale_tmp_and_trash(store, tmp_path):
-    import os
-
     store.create("f7", ["a", "b"])
     root = store.root
     os.makedirs(os.path.join(root, "f7.__merge_tmp"))
@@ -292,8 +394,6 @@ def test_merge_cleans_stale_tmp_and_trash(store, tmp_path):
 
 def test_concurrent_merges_serialize(store):
     # two merges of one dataset must not destroy each other's tmp dirs
-    import threading
-
     store.create("f8", [f"m{i}" for i in range(30)])
     store.append("f8", ["extra1", "extra2"])
     errs: list[Exception] = []
