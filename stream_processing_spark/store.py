@@ -19,14 +19,15 @@ durability belong to the storage layer (HDFS/S3), so what remains as
 - **merge**       — compacts parts; MUST NOT change query results
                     (merge_file file_system.py:286-365 makes replicas
                     byte-identical; our invariant is multiset + per-writer
-                    order equality)
+                    order equality); pyarrow streams the parts into new
+                    files, no Spark job, like the reference's chunk concat
 - **get**         — versioned read with client-side cache: `get_lines`
                     keeps materialized lines per (dataset id, version),
-                    so an unchanged version ⇒ no re-read and no Spark
-                    job (shared.py:36-81, ≤500 entries); a miss that
-                    a merge's swap cuts short retries at the merged
-                    version; `get` is the lazy frame over the current
-                    parts
+                    so an unchanged version ⇒ no re-read (shared.py:36-81,
+                    ≤500 entries); a miss reads the parts with pyarrow, no
+                    Spark job, and retries at the merged version if a
+                    merge's swap cuts it short; `get` is the lazy Spark
+                    frame over the current parts (the scale path)
 - **ls / store**  — metadata listing (bin/ls.py, bin/store.py)
 
 Order is carried AS DATA — (writer, wseq, idx) columns — not as file
@@ -41,7 +42,7 @@ single-filesystem equivalent.
 from __future__ import annotations
 
 import json
-import operator
+import math
 import os
 import shutil
 import threading
@@ -50,29 +51,14 @@ import uuid
 from collections.abc import Callable
 
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
-LINE_SCHEMA = StructType(
-    [
-        StructField("writer", StringType(), False),
-        StructField("wseq", LongType(), False),
-        StructField("idx", LongType(), False),
-        StructField("value", StringType(), True),
-    ]
-)
-
-# LINE_SCHEMA as pyarrow writes it. Spark reads every file column back
-# as nullable; the files themselves keep writer/wseq/idx non-null.
+# one line: its writer, the writer's append number, its index within the
+# append, its text. Every file keeps the three key columns non-null.
 _ARROW_SCHEMA = pa.schema(
     [
         pa.field("writer", pa.string(), nullable=False),
@@ -81,6 +67,16 @@ _ARROW_SCHEMA = pa.schema(
         pa.field("value", pa.string(), nullable=True),
     ]
 )
+LINE_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
+
+# as Spark reads files back, every column nullable: both reads use it
+_ARROW_READ_SCHEMA = pa.schema([f.with_nullable(True) for f in _ARROW_SCHEMA])
+_READ_SCHEMA = from_arrow_schema(_ARROW_READ_SCHEMA)
+
+# rows in a merged file's row group, which is what a merge holds in memory
+_MERGE_GROUP_ROWS = 1 << 17
+# merged files dictionary-encode the repeating keys; lines and indices are smaller plain
+_MERGE_DICT_COLUMNS = ["writer", "wseq"]
 
 # times a read retries after a merge swapped the dataset under it
 _READ_RETRIES = 3
@@ -89,6 +85,13 @@ _CACHE_CAP = 500  # reference: bin/get_file.py:41-50 caps the client cache
 # total line characters the read cache holds; a dataset larger than this
 # is returned but never cached
 _CACHE_CHARS = 1 << 25
+
+
+def _arrow_parts(d: str, parts: list[str], schema: pa.Schema) -> pads.Dataset:
+    """Part directories `parts` of `d` as one pyarrow dataset. A directory
+    dataset skips names starting with "_" or ".": Spark's side files."""
+    parts_ds = [pads.dataset(os.path.join(d, p), schema=schema) for p in parts]
+    return pads.dataset(parts_ds, schema=schema)
 
 
 class DatasetExistsError(Exception):
@@ -241,17 +244,19 @@ class Store:
             raise errs[0]
 
     def merge(self, name: str, target_parts: int = 1) -> None:
-        """Compact all append parts into `target_parts` files. The
+        """Compact all append parts into at most `target_parts` files. The
         invariant (tested): the ordered projection of the dataset is
         IDENTICAL before and after — merge changes layout, never content.
+        pyarrow streams the rows, unsorted (order is data, readers sort),
+        into coalesced row groups: no Spark job.
 
-        Concurrent-append safe: the expensive Spark rewrite runs OUTSIDE
-        the lock over a snapshot of part names; inside the lock, any
-        part-* created after the snapshot is moved verbatim into the
-        merged directory and meta is RE-READ before the swap, so late
-        appends are neither lost nor their wseq counters rolled back.
-        The new directory gets its meta written before the swap, so a
-        reader never observes a dataset directory without _meta.json.
+        Concurrent-append safe: the rewrite runs OUTSIDE the lock over a
+        snapshot of part names; inside the lock, any part-* created after
+        the snapshot is moved verbatim into the merged directory and meta
+        is RE-READ before the swap, so late appends are neither lost nor
+        their wseq counters rolled back. The new directory gets its meta
+        written before the swap, so a reader never observes a dataset
+        directory without _meta.json.
         """
         d = self._dir(name)
         tmp = d + ".__merge_tmp"
@@ -261,31 +266,27 @@ class Store:
         with mlock:
             self._merge_locked(name, d, tmp, trash, target_parts)
 
-    def _merge_locked(
-        self, name: str, d: str, tmp: str, trash: str, target_parts: int
-    ) -> None:
+    def _merge_locked(self, name: str, d: str, tmp: str, trash: str, target_parts: int) -> None:
         with self._lock:
-            if not os.path.isdir(d):
-                raise DatasetNotFoundError(name)
+            snapshot = self._parts(name)
             # a crash between the tmp write and the swap can leave either
             # directory behind; both are safe to discard (tmp is a partial
             # rewrite of parts that still live in `d`, trash is pre-swap)
             for stale in (tmp, trash):
                 if os.path.isdir(stale):
                     shutil.rmtree(stale)
-            snapshot = [p for p in os.listdir(d) if p.startswith("part-")]
-        if snapshot:
-            df = self.spark.read.schema(LINE_SCHEMA).parquet(
-                *[os.path.join(d, p) for p in snapshot]
+        os.makedirs(tmp)
+        src = _arrow_parts(d, snapshot, _ARROW_SCHEMA)
+        if rows := src.count_rows():  # an empty dataset gets no part
+            per_file = math.ceil(rows / target_parts)
+            group = min(per_file, _MERGE_GROUP_ROWS)
+            fmt = pads.ParquetFileFormat()
+            pads.write_dataset(
+                src, os.path.join(tmp, f"part-{time.time_ns()}-merged"), format=fmt,
+                file_options=fmt.make_write_options(use_dictionary=_MERGE_DICT_COLUMNS),
+                basename_template="part-{i}.parquet", max_rows_per_file=per_file,
+                min_rows_per_group=group, max_rows_per_group=group,
             )
-            (
-                df.repartition(target_parts)
-                .sortWithinPartitions("writer", "wseq", "idx")
-                .write.mode("overwrite")
-                .parquet(os.path.join(tmp, f"part-{time.time_ns()}-merged"))
-            )
-        else:
-            os.makedirs(tmp)
         with self._lock:
             meta = self._read_meta(name)  # fresh: keeps post-snapshot wseq
             snapshot_set = set(snapshot)
@@ -299,14 +300,19 @@ class Store:
             shutil.rmtree(trash)
 
     # ----------------------------------------------------------- reads
-    def _read_all(self, name: str) -> DataFrame:
+    def _parts(self, name: str) -> list[str]:
+        """The names of the dataset's part directories, sorted."""
         d = self._dir(name)
         if not os.path.isdir(d):
             raise DatasetNotFoundError(name)
-        parts = [p for p in os.listdir(d) if p.startswith("part-")]
+        return sorted(p for p in os.listdir(d) if p.startswith("part-"))
+
+    def get(self, name: str) -> DataFrame:
+        """The dataset as a lazy frame over its current parts."""
+        d, parts = self._dir(name), self._parts(name)
         if not parts:
-            return self.spark.createDataFrame([], LINE_SCHEMA)
-        df = self.spark.read.schema(LINE_SCHEMA).parquet(*[os.path.join(d, p) for p in parts])
+            return self.spark.createDataFrame([], _READ_SCHEMA)
+        df = self.spark.read.schema(_READ_SCHEMA).parquet(*[os.path.join(d, p) for p in parts])
         # Spark lists a path that vanishes after its existence check as
         # empty, without an error: a part that a merge's swap moves away
         # in that instant would silently drop out of the read. Every part
@@ -317,23 +323,19 @@ class Store:
             raise FileNotFoundError(os.path.join(d, missing[0]))
         return df
 
-    def get(self, name: str) -> DataFrame:
-        """The dataset as a lazy frame over its current parts."""
-        return self._read_all(name)
-
     def get_lines(self, name: str) -> list[str]:
         """Materialized lines in the canonical (writer, wseq, idx) order.
 
         Versioned read (reference S7 semantics — 'version unchanged ⇒ no
         transfer'): while the dataset's id and version are unchanged the
-        cached lines are returned and no Spark job runs. The key is read
-        BEFORE the scan, so a scan racing a write can only label newer
-        lines with an older key — one extra miss, never a stale read.
-        Spark orders strings by UTF-8 bytes and Python by code points;
-        the two orders agree, so the driver-side sort is the canonical one.
-        A merge that swaps the dataset during a miss trashes the parts the
-        scan listed; the scan then fails, and is retried at the key the
-        merge published (a failure at an unmoved key is raised).
+        cached lines are returned and no part file is opened. The key is
+        read BEFORE the scan, so a scan racing a write can only label
+        newer lines with an older key — one extra miss, never a stale
+        read. A miss reads the parts with pyarrow and sorts in Arrow,
+        which compares strings by UTF-8 bytes, as Spark does. A merge
+        that swaps the dataset during a miss trashes the parts the scan
+        listed; the scan then fails, and is retried at the key the merge
+        published (a failure at an unmoved key is raised).
         """
         key = self._key(name)
         for attempt in range(_READ_RETRIES + 1):
@@ -341,15 +343,16 @@ class Store:
             if hit is not None and hit[0] == key:
                 return list(hit[1])
             try:
-                rows = self._read_all(name).collect()
+                parts = _arrow_parts(self._dir(name), self._parts(name), _ARROW_READ_SCHEMA)
+                table = parts.to_table()
                 break
-            except (OSError, DatasetNotFoundError, PySparkException, Py4JJavaError):
+            except (OSError, DatasetNotFoundError):
                 moved = self._key(name)
                 if moved == key or attempt == _READ_RETRIES:
                     raise
                 key = moved
-        rows.sort(key=operator.itemgetter(0, 1, 2))  # (writer, wseq, idx)
-        lines = tuple(r.value for r in rows)
+        table = table.sort_by([(c, "ascending") for c in ("writer", "wseq", "idx")])
+        lines = tuple(table.column("value").to_pylist())
         self._remember(name, key, lines)
         return list(lines)
 
@@ -391,10 +394,7 @@ class Store:
     def ls(self, name: str) -> dict:
         """Dataset metadata: version, part files, total bytes (the
         replica-listing analogue of reference `ls`)."""
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            raise DatasetNotFoundError(name)
-        parts = sorted(p for p in os.listdir(d) if p.startswith("part-"))
+        d, parts = self._dir(name), self._parts(name)
         size = sum(
             os.path.getsize(os.path.join(dp, f))
             for dp, _, fs in os.walk(d)

@@ -29,7 +29,9 @@ code in the package calls ``localCheckpoint`` or ``checkpoint``. Another
 keeps ``functions/keys.py`` the only module that chooses a hash: no
 other code calls ``xxhash64`` or ``conv``, in Python or in SQL text. A
 third keeps ``metrics.noop_walls`` the only query timer: bench.py and
-tools/ write to the noop sink only through it.
+tools/ write to the noop sink only through it. A fourth keeps Spark out
+of the store's driver-held paths: in ``store.py`` only ``get`` and
+``append_df`` use the session.
 """
 
 from __future__ import annotations
@@ -330,6 +332,32 @@ def test_session_confs_set_in_two_places():
     assert not direct, (
         "set session confs through streaming.job.start_with_confs: "
         + ", ".join(f"{rel}:{line}" for rel, line in sorted(direct))
+    )
+
+
+def test_store_spark_only_in_scale_paths():
+    # the store's driver-held paths (append, merge, get_lines) read and
+    # write parquet with pyarrow; only the lazy read `get` and the scale
+    # write `append_df` may touch the session and start Spark jobs
+    allowed = {"get", "append_df"}
+    path = pathlib.Path(stream_processing_spark.__file__).parent / "store.py"
+    direct = []
+    todo = [ast.parse(path.read_text(), "store.py")]
+    while todo:
+        node = todo.pop()
+        if isinstance(node, ast.FunctionDef) and node.name in allowed:
+            continue
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.ctx, ast.Load)
+            and node.attr == "spark"
+            and getattr(node.value, "id", None) == "self"
+        ):
+            direct.append(node.lineno)
+        todo.extend(ast.iter_child_nodes(node))
+    assert not direct, (
+        "store.py uses self.spark outside get/append_df at lines "
+        + ", ".join(map(str, sorted(direct)))
     )
 
 

@@ -80,16 +80,26 @@ def _jobs(spark, read):
     return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
-def test_versioned_get_caching(store, spark):
-    # reference S7: version unchanged => no transfer, so no Spark job
+def test_versioned_get_caching(store, spark, monkeypatch):
+    # reference S7: version unchanged => no transfer, so no part file is
+    # opened; a miss and a merge read the parts with pyarrow, no Spark job
     store.create("f5", ["v0"])
-    assert _jobs(spark, lambda: store.get_lines("f5"))[1] >= 1
     assert _jobs(spark, lambda: store.get_lines("f5")) == (["v0"], 0)
+    opened = []
+    real = store_mod.pads.dataset
+    monkeypatch.setattr(
+        store_mod.pads, "dataset", lambda *a, **k: opened.append(a) or real(*a, **k)
+    )
+    assert _jobs(spark, lambda: store.get_lines("f5")) == (["v0"], 0)
+    assert opened == []
     store.append("f5", ["v1"])
     assert store.get_lines("f5") == ["v0", "v1"]
-    store.merge("f5")
+    assert opened  # the miss opened the parts
+    assert _jobs(spark, lambda: store.merge("f5"))[1] == 0
     assert store.get_lines("f5") == ["v0", "v1"]
+    opened.clear()
     assert _jobs(spark, lambda: store.get_lines("f5")) == (["v0", "v1"], 0)
+    assert opened == []
     store.delete("f5")
     store.create("f5", ["new"])
     assert store.get_lines("f5") == ["new"]
@@ -194,8 +204,8 @@ def test_read_cache_concurrent_readers_and_writers(store):
 
 
 def test_get_lines_order_matches_spark_order(store, spark):
-    # the cache sorts on the driver (Python compares code points) where
-    # the old read sorted in Spark (UTF-8 bytes): the two orders agree.
+    # get_lines sorts in Arrow and this test sorts in Spark: both compare
+    # strings by UTF-8 bytes, which is also Python's code-point order.
     # The parts mix pyarrow-written appends with one Spark-written
     # append_df part.
     writers = ["Z", "a", "é", "😀", "ab", "Ä"]
@@ -227,8 +237,8 @@ def test_driver_appends_run_no_spark_job(store, spark):
 
 def test_pyarrow_parts_round_trip(store, spark):
     # an empty append, a null line and non-ASCII lines read back as
-    # written, through Spark's reader (a fresh Store, so no cache) and
-    # after a merge rewrites them with Spark
+    # written, through a fresh Store (so no cache), Spark's reader, and
+    # after a merge rewrites them
     lines = ["plain", None, "", "naïve", "日本語", "😀 emoji"]
     store.create("rt", lines, writer="w0")
     store.append("rt", [], writer="w0")
@@ -332,12 +342,68 @@ def test_ls_store_delete(store):
 
 def test_append_df_scale_path(store, spark):
     store.create("big")
-    df = spark.range(1000).selectExpr("concat('row-', id) AS value")
+    df = spark.range(1000).repartition(3).selectExpr("concat('row-', id) AS value")
     store.append_df("big", df)
     assert store.get("big").count() == 1000
+    # a Spark-written part: several data files beside _SUCCESS and .crc
+    part = os.listdir(os.path.join(store.root, "big", store.ls("big")["parts"][0]))
+    assert "_SUCCESS" in part and any(f.endswith(".crc") for f in part)
+    assert sum(f.endswith(".parquet") and not f.startswith(".") for f in part) == 3
+    lines = store.get_lines("big")
     store.merge("big", target_parts=2)
     assert store.get("big").count() == 1000
     assert len(store.ls("big")["parts"]) == 1  # one merged part dir
+    merged = os.path.join(store.root, "big", store.ls("big")["parts"][0])
+    files = sorted(os.listdir(merged))
+    assert len(files) == 2 and not any(f.startswith(("_", ".")) for f in files)
+    assert Store(spark, store.root).get_lines("big") == lines
+    for name in files:
+        schema = pq.read_schema(os.path.join(merged, name))
+        assert [(f.name, f.nullable) for f in schema] == [
+            (f.name, f.nullable) for f in LINE_SCHEMA
+        ]
+
+
+def test_merge_empty_dataset(store, spark):
+    # no parts, or only an empty append: the merge still swaps in a new
+    # version, and the dataset reads back empty with no part left
+    store.create("e0")
+    store.create("e1", [])
+    for name in ("e0", "e1"):
+        version = store.version(name)
+        store.merge(name)
+        assert store.version(name) == version + 1
+        assert store.ls(name)["parts"] == []
+        assert Store(spark, store.root).get_lines(name) == []
+        assert store.get(name).count() == 0
+
+
+def test_merge_writes_one_row_group(store):
+    # coalesced row groups: a few thousand rows from many small parts
+    # merge into one file of one row group, not one group per input batch
+    store.create("rg", [f"base{i}" for i in range(500)])
+    for k in range(5):
+        store.multiappend("rg", {f"w{w}": [f"{k}-{w}-{i}" for i in range(150)] for w in range(4)})
+    before = store.get_lines("rg")
+    store.merge("rg")
+    merged = os.path.join(store.root, "rg", store.ls("rg")["parts"][0])
+    (name,) = os.listdir(merged)
+    meta = pq.ParquetFile(os.path.join(merged, name)).metadata
+    assert (meta.num_rows, meta.num_row_groups) == (3500, 1)
+    assert store.get_lines("rg") == before
+
+
+def test_get_schema_does_not_depend_on_parts(store):
+    # Spark reads every file column back as nullable; a dataset with no
+    # parts reports the same schema
+    store.create("sch")
+    empty = store.get("sch").schema
+    store.append("sch", ["a"])
+    assert store.get("sch").schema == empty
+    assert [(f.name, f.dataType) for f in empty] == [
+        (f.name, f.dataType) for f in LINE_SCHEMA
+    ]
+    assert all(f.nullable for f in empty)
 
 
 def test_merge_concurrent_append_not_lost(store):
